@@ -21,114 +21,113 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "top_nations_by_orders"
 
 #: The driver's CORRECTNESS record keeps only the first 50 entries of
-#: ``queries()``. Round-17 window, built by the ROLLING rotation rule
-#: (tests/test_registry.py): (a) every PLAN_CHANGED query — the r16
-#: optimization round's rewrites escaped driver verification because
-#: the r16 window spent everything on rotation debt (VERDICT r16
-#: "What's wrong #2"); the r15 clause is restored, so the r16 rewrites
-#: AND this round's plan edits all get an official row; (b) as much of
-#: the 43-query r11 rotation tranche (oldest official tier) as fits
-#: after (a) — plan-changed takes priority per the verdict's item-2
-#: wording. The r17 session-2 probe-fold/BPE rewrites added 8 more
-#: PLAN_CHANGED rows, so 9 r11-tranche rows (simple profile/aggregate
-#: queries, plans untouched for 6 rounds) roll to r18: their r11
-#: official rows stay inside the capacity-derived staleness bound
-#: (r10), and r18 has free slots per the note below. Two PLAN_CHANGED
-#: entries (`embeddings_stream_knn_served`, `bpe_train_merges`) are
-#: themselves r11-tranche rows.
-#: ROTATION NOTE for r18: after this window the oldest tranche is the
-#: 43 r12-row queries plus the 9 r11 rows deferred here; r18's window
-#: = its own new/plan-changed set + the 9 r11 deferrals first, then
-#: r12 rows.
+#: ``queries()``. Round-18 window, built by the ROLLING rotation rule
+#: (tests/test_registry.py): (a) every PLAN_CHANGED query — driver-side
+#: rows now reach Spark as Arrow local relations (`sources.readers.
+#: local_frame`) instead of pickled Python RDDs, so every plan with such
+#: a leaf changed, and the exact LocalRelation statistics turn several
+#: probe/query-side shuffles into broadcasts; (b) the 8 rows whose
+#: newest official row is r11 (deferred from r17); (c) as many of the
+#: r12 rows as fit, in registry order.
+#: ROTATION NOTE for r19: the 14 r12 rows left out here come first
+#: after r19's own plan-changed set, then the r13 rows.
 SHOWCASE = [
-    # (a) r16/r17 plan-changed (see PLAN_CHANGED below)
-    "corpus_importance_sample",
-    "corpus_importance_served",
-    "corpus_pipeline_served",
-    "corpus_pipeline_streamed",
-    "dedup_incremental_status_served",
-    "documents_stream_dedup_status",
-    "features_pit_served",
-    # (a) r17 session-2 rewrites: one-job probe setup (serving plans
-    # lost the embeddings scan; probe list + query side now local
-    # relations) and the estimate-gated driver-side BPE trainer
+    # (a) r18 plan-changed (see PLAN_CHANGED below)
+    "knn_ivf",
+    "ann_ivf_recall",
+    "knn_ivfpq",
+    "ann_ivfpq_recall",
     "knn_ivfpq_served",
     "knn_ivf_served",
     "knn_sq8_served",
-    "knn_ivf_filtered_served",
+    "ann_sq8_recall",
+    "knn_ivfpq_residual",
     "knn_ivfpq_residual_served",
+    "ann_ivfpq_residual_recall",
     "knn_ivf_maintenance_served",
+    "knn_ivf_filtered_served",
+    "ann_sq8_mrr",
+    "ann_centroid_drift_report",
     "embeddings_stream_index_append",
-    "bpe_encode_corpus",
-    # (b) the r11 rotation tranche minus 9 deferred simple-aggregate
-    # rows (includes embeddings_stream_knn_served and bpe_train_merges
-    # — both also PLAN_CHANGED)
-    "tpch_q3_shipping_priority",
-    "tpch_q14_promo_effect",
-    "lineitem_price_qty_corr",
-    "text_quality_scores",
-    "token_stats_by_source",
-    "dedup_simhash",
-    "token_counts_bpe_ish",
-    "doc_winnowing_fingerprints",
-    "doc_trigram_lm",
-    "doc_feature_hashing",
-    "doc_chunk_windows",
-    "doc_lm_likelihood",
-    "source_token_divergence",
-    "doc_kn_bigram_likelihood",
-    "dedup_simhash_pairs",
-    "events_sliding_2h",
-    "events_json_extract",
-    "events_json_corrupt_audit",
-    "events_cep_triples",
-    "ann_index_build_roundtrip",
-    "ann_index_append_roundtrip",
-    "multimodal_resize",
-    "multimodal_payload_dedup",
-    "embeddings_stream_knn_served",
-    "tpch_q4_late_order_priority",
-    "tpch_q7_nation_trade_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_profit_by_nation_year",
-    "tpch_q10_returned_items",
-    "tpch_q12_priority_by_shipcat",
-    "tpch_q13_order_count_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customers",
+    "events_dpp_partitioned_join",
+    "immigration_etl_fact",
+    "immigration_etl_city_demographics",
+    "corpus_epoch_shuffle",
+    "quality_perceptron_train",
     "bpe_train_merges",
+    "bpe_encode_corpus",
+    "corpus_examples_packed",
+    # (b) the r11 rows deferred from r17
+    "distinct_counts_per_segment",
+    "dedup_exact_rows",
+    "table_row_counts",
+    "sql_revenue_by_priority",
+    "approx_distinct_summary",
+    "regional_supplier_revenue",
+    "orders_column_profile",
+    "tpch_q6_forecast_revenue",
+    # (c) r12 rows, registry order
+    "bucketed_join_roundtrip",
+    "atomic_publish_roundtrip",
+    "publish_time_travel",
+    "lineitem_bloom_pruned_join",
+    "dq_constraint_report",
+    "dedup_simhash_recall",
+    "source_dup_rate_report",
+    "events_dynamic_gap_sessions",
+    "events_wow_growth",
+    "knn_lsh_bucketed",
+    "label_centroids",
+    "knn_matryoshka16",
+    "ann_matryoshka_recall",
+    "events_user_linear_trend",
+    "events_time_weighted_avg",
+    "events_ohlc_bars",
+    "events_heavy_hitters_cms",
+    "events_zorder_box_scan",
 ]
 
-#: Queries whose plan, oracle, or constructed result changed in r16 or
-#: r17 (beyond brand-new ones, which tests/test_registry.py derives as
+#: Queries whose plan, oracle, or constructed result changed in r18
+#: (beyond brand-new ones, which tests/test_registry.py derives as
 #: "registered but no official row yet"). The rolling rotation test
 #: asserts these sit inside the window so changed behavior always gets
 #: an official row the round it ships. Update per round.
+#: r18: formatted-plan diff (tools/capture_plans.py, sf0.01) of the
+#: parent against the `local_frame` change, expression ids, RDD ids and
+#: temp paths normalized. Every entry lost a ``Scan ExistingRDD`` leaf
+#: to a ``LocalTableScan``. On top of that: the persisted-serve family
+#: now broadcasts its bounded probe list and streams the routed store
+#: scan, where the probe list's unknown size made it broadcast the store
+#: scan; ``corpus_examples_packed``'s estimate-gated running sum sees
+#: the trained vocab's exact size and takes the plain-window shape
+#: instead of the range shape an unknown size forced; and
+#: ``events_dpp_partitioned_join`` reads its dim as a parquet table (a
+#: local relation's filter folds away, and DPP would not fire).
 PLAN_CHANGED: list[str] = [
-    # r16 rewrites that escaped the r16 window (VERDICT r16 item 2):
-    # the _dsir_scores single-pass (4 consumers), the classify
-    # union-agg finish, the two serve memos, the streamed twins.
-    "corpus_importance_sample",
-    "corpus_importance_served",
-    "corpus_pipeline_served",
-    "corpus_pipeline_streamed",
-    "dedup_incremental_status_served",
-    "documents_stream_dedup_status",
-    "features_pit_served",
-    "embeddings_stream_knn_served",
-    # r17 session-2: one-job probe setup (serving plans scan only the
-    # routed store; probe list + query side local) — every persisted-
-    # serve path — and the estimate-gated driver-side BPE trainer.
+    "knn_ivf",
+    "ann_ivf_recall",
+    "knn_ivfpq",
+    "ann_ivfpq_recall",
     "knn_ivfpq_served",
     "knn_ivf_served",
     "knn_sq8_served",
-    "knn_ivf_filtered_served",
+    "ann_sq8_recall",
+    "knn_ivfpq_residual",
     "knn_ivfpq_residual_served",
+    "ann_ivfpq_residual_recall",
     "knn_ivf_maintenance_served",
+    "knn_ivf_filtered_served",
+    "ann_sq8_mrr",
+    "ann_centroid_drift_report",
     "embeddings_stream_index_append",
-    "bpe_encode_corpus",
+    "events_dpp_partitioned_join",
+    "immigration_etl_fact",
+    "immigration_etl_city_demographics",
+    "corpus_epoch_shuffle",
+    "quality_perceptron_train",
     "bpe_train_merges",
+    "bpe_encode_corpus",
+    "corpus_examples_packed",
 ]
 
 

@@ -22,6 +22,20 @@ from udacity_dend_capstone_immigration_spark.workload import vectors as V
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _assert_only_probe_local_relations(plan: str) -> None:
+    """Every local relation in a formatted serving plan is one of the
+    two bounded decision frames `_served_probe_setup` builds — the
+    probe list (query_id, cell) and the query side (query_id, q_emb) —
+    and both are present."""
+    import re
+
+    nodes = re.findall(r"\(\d+\) LocalTableScan\n(?:.*\n){1,3}", plan)
+    for node in nodes:
+        assert "query_id" in node and ("cell" in node or "q_emb" in node), node
+    assert any("cell" in n for n in nodes), plan[:2000]
+    assert any("q_emb" in n for n in nodes), plan[:2000]
+
+
 @pytest.fixture(scope="module")
 def index_dir(spark):
     return V.served_index_dir(spark, SF_DIR)
@@ -95,19 +109,13 @@ def test_serving_plan_reads_only_index_and_queries(spark, index_dir):
     # no training/encoding shapes: training collects eagerly (never in
     # a plan), and an in-plan corpus encode would show as a second
     # MapInPandas over an embeddings scan; no explode-based centroid
-    # aggregation either. The ONLY local relation allowed is the
-    # collected probe list (query_id, cell) — bounded at queries ×
-    # NPROBE rows by construction; a corpus-sized checkpoint here
-    # would be a broken serving plan
+    # aggregation either.
     assert "Generate" not in plan
     # the only local relations allowed are the collected probe list
-    # (query_id, cell) and — since r17's one-job probe setup — the
-    # bounded query-vector side (query_id, q_emb); both are ≤ queries ×
-    # NPROBE rows by construction. A corpus-sized checkpoint here would
-    # be a broken serving plan.
-    rdd_nodes = re.findall(r"\(\d+\) Scan ExistingRDD\n(?:.*\n){1,3}", plan)
-    for node in rdd_nodes:
-        assert "query_id" in node and ("cell" in node or "q_emb" in node), node
+    # (query_id, cell) and the bounded query-vector side (query_id,
+    # q_emb); both are ≤ queries × NPROBE rows by construction. A
+    # corpus-sized checkpoint here would be a broken serving plan.
+    _assert_only_probe_local_relations(plan)
     # r17: the serving plan never scans the embeddings table AT ALL —
     # the query side is the local relation `_served_probe_setup`
     # collected in its one bounded job (pre-r17 the plan re-scanned
@@ -337,9 +345,7 @@ def test_sq8_serving_plan_is_routed_and_training_free(spark):
     plan = buf.getvalue()
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
     assert "Generate" not in plan
-    rdd_nodes = re.findall(r"\(\d+\) Scan ExistingRDD\n(?:.*\n){1,3}", plan)
-    for node in rdd_nodes:
-        assert "query_id" in node and ("cell" in node or "q_emb" in node), node
+    _assert_only_probe_local_relations(plan)
     # r17: no embeddings scan anywhere — the query side is the local
     # relation from `_served_probe_setup`'s one bounded job
     assert "embeddings.parquet" not in plan, plan[:2000]

@@ -22,6 +22,21 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _stream_append(spark, tmp_path, d, rows, name):
+    """Land ``rows`` in the store at ``d`` as one streamed micro-batch."""
+    from udacity_dend_capstone_immigration_spark.workload.dedupstore import (
+        stream_append_to_dedup_index,
+    )
+
+    src = tmp_path / name
+    src.mkdir()
+    _docs(spark, rows).coalesce(1).write.parquet(str(src / "docs"))
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(src / "docs")
+    )
+    stream_append_to_dedup_index(spark, stream, d, str(tmp_path / f"ck_{name}"))
+
+
 def _postings(spark, d):
     return {
         (r["g"], r["cid"]) for r in read_dedup_shingle_index(spark, d).collect()
@@ -142,33 +157,17 @@ def test_stream_append_two_waves_cross_wave_crossing_and_fold(spark, tmp_path):
     +1 in wave 2 -> crossing decided against main+delta, tombstoned in
     the wave-2 delta. Fold absorbs both waves; the raw store then
     equals a from-scratch rebuild on everything."""
-    from udacity_dend_capstone_immigration_spark.workload.dedupstore import (
-        stream_append_to_dedup_index,
-    )
-
     base = [(1, "a b c x1 y1"), (2, "a b c x2 y2")]
     w1 = [(3, "a b c x3 y3")]
     w2 = [(4, "a b c x4 y4")]
     d = str(tmp_path / "sidx")
     build_dedup_index(spark, _docs(spark, base), d, cap=3)
 
-    def drain(rows, name):
-        src = tmp_path / name
-        src.mkdir()
-        _docs(spark, rows).coalesce(1).write.parquet(str(src / "docs"))
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(str(src / "docs"))
-        )
-        stream_append_to_dedup_index(
-            spark, stream, d, str(tmp_path / f"ck_{name}")
-        )
-
-    drain(w1, "w1")
+    _stream_append(spark, tmp_path, d, w1, "w1")
     assert os.path.isdir(f"{d}/shingle_index_delta")
     posts_after_w1 = _postings(spark, d)
     assert ("a b c", 3) in posts_after_w1  # df 3 == cap: kept
-    drain(w2, "w2")
+    _stream_append(spark, tmp_path, d, w2, "w2")
     posts = _postings(spark, d)
     assert not any(g == "a b c" for g, _ in posts)  # crossed at df 4
     assert os.path.isdir(f"{d}/dropped_shingles_delta")
@@ -192,11 +191,35 @@ def test_stream_append_two_waves_cross_wave_crossing_and_fold(spark, tmp_path):
     assert sizes == {1, 2, 3, 4}
 
 
+def _raw_fingerprints(spark, d):
+    return {
+        (r["fp"], r["cid"])
+        for r in spark.read.parquet(f"{d}/fingerprints").collect()
+    }
+
+
+def test_stream_append_fold_keeps_fingerprint_cids(spark, tmp_path):
+    """The fold must carry each streamed fingerprint's owning doc
+    (``cid``) into the main relation: a document delete needs the
+    per-doc (fp, cid) rows, and a fold that keeps only ``fp`` leaves
+    null or unresolvable owners behind. After append + fold the raw
+    relation equals a from-scratch rebuild, row for row."""
+    d = str(tmp_path / "fidx")
+    build_dedup_index(spark, _docs(spark, CORPUS), d, cap=3)
+    _stream_append(spark, tmp_path, d, BATCH, "w")
+    fold_dedup_index(spark, d)
+    assert not os.path.isdir(f"{d}/fingerprints_delta")
+    rebuilt = str(tmp_path / "rebuilt")
+    build_dedup_index(spark, _docs(spark, CORPUS + BATCH), rebuilt, cap=3)
+    got = _raw_fingerprints(spark, d)
+    assert {cid for _, cid in got} == {1, 2, 3, 4}
+    assert got == _raw_fingerprints(spark, rebuilt)
+
+
 def test_dedup_maintenance_policy(spark, tmp_path):
     from udacity_dend_capstone_immigration_spark.workload.dedupstore import (
         dedup_maintenance_due,
         run_dedup_maintenance,
-        stream_append_to_dedup_index,
     )
 
     d = str(tmp_path / "pidx")
@@ -208,15 +231,7 @@ def test_dedup_maintenance_policy(spark, tmp_path):
     }
     # land one streamed wave (creates deltas + a cross-wave tombstone
     # is NOT triggered here: df 'a b c' goes 3 -> 4 == crossing)
-    src = tmp_path / "w"
-    src.mkdir()
-    _docs(spark, BATCH).coalesce(1).write.parquet(str(src / "docs"))
-    stream_append_to_dedup_index(
-        spark,
-        spark.readStream.schema("doc_id long, text string").parquet(str(src / "docs")),
-        d,
-        str(tmp_path / "ck"),
-    )
+    _stream_append(spark, tmp_path, d, BATCH, "w")
     # one pending batch: below the default batch threshold the deltas
     # would stay — but the tombstone pressure makes the fold due
     # regardless (text tombstones are folded, not compacted)

@@ -375,7 +375,9 @@ def test_no_static_broadcast_of_estimate_blind_relations(spark):
     hints; this gate scans every registered query's plan for a
     BroadcastExchange whose build subtree contains a Generate (explode)
     or an ExistingRDD scan (checkpoint) and pins the surviving set to
-    the allowlist of provably BOUNDED builds below.
+    the allowlist of provably BOUNDED builds below. Driver-side rows
+    (`sources.readers.local_frame`) scan as LocalTableScan with exact
+    statistics, so bounded local relations need no entry here.
     """
     ALLOWED = {
         # explicit F.broadcast of bounded sides that happen to sit on
@@ -389,24 +391,11 @@ def test_no_static_broadcast_of_estimate_blind_relations(spark):
         # grouped pair-generation caps) broadcast into the wedge /
         # closing-edge joins; scans as ExistingRDD, hence the hit
         "dedup_triangle_cohesion",
-        # the 2-row literal epoch frame (explicit F.broadcast of a
-        # local relation)
-        "corpus_epoch_shuffle",
         # the exploded approx_top_k sketch output (k=10 rows by
         # construction) joined against the exact counts — the Generate
         # makes it estimate-blind, the k bound makes it broadcastable
         "events_approx_top_k_users",
-        "knn_ivf",                      # N_CELLS trained centroids
-        "ann_ivf_recall",               # same centroids (composed)
-        "knn_ivfpq",                    # same N_CELLS centroids + 10-row query side
-        "ann_ivfpq_recall",             # same centroids (composed)
-        # the COLLECTED probe list (queries × NPROBE rows, local
-        # relation) broadcast into the candidate join — bounded by
-        # construction; it scans as ExistingRDD, hence the suspect hit
-        "knn_ivfpq_served",
-        "embedding_pq_residual_distortion",  # same centroids (residual join)
-        "knn_ivfpq_residual",           # same centroids + 10-row query side
-        "ann_ivfpq_residual_recall",    # same centroids (composed)
+        "embedding_pq_residual_distortion",  # N_CELLS centroids (residual join)
         # N_CELLS centroids + 10-row query side + one-row query-count
         # aggregate (the hits/exact joins are merge-hinted)
         "ann_ivf_nprobe_curve",
@@ -427,7 +416,6 @@ def test_no_static_broadcast_of_estimate_blind_relations(spark):
         # rank table broadcasts)
         "corpus_pipeline_served",
         "centroid_classifier_confusion",  # |labels| x 64 centroid cells
-        "immigration_etl_fact",         # SAS label dims (local collections)
         "events_cohort_retention",      # one row per cohort week
         # implicit but bounded: distinct active DAYS (time span, not SF)
         "events_rolling_wau",
@@ -456,10 +444,6 @@ def test_no_static_broadcast_of_estimate_blind_relations(spark):
         # cell build explodes the 4 depths per row, hence the Generate
         "events_heavy_hitters_cms",
         "events_stream_heavy_hitters",
-        # explicit F.broadcast of the 5-row literal event-type dim
-        # (local relation → ExistingRDD); the broadcast IS the point —
-        # DPP reuses it as the runtime partition filter
-        "events_dpp_partitioned_join",
         # explicit F.broadcast of the one-row nation-total aggregate,
         # derived from the lazily-checkpointed per-part value frame
         # (ExistingRDD), hence the hit — one row at any SF

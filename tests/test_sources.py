@@ -154,3 +154,111 @@ def test_schema_evolution_merge_on_read(spark, tmp_path):
     assert set(merged.columns) == {"doc_id", "text", "lang"}
     rows = {r["doc_id"]: r["lang"] for r in merged.collect()}
     assert rows == {0: None, 1: "en"}
+
+
+# --- local_frame: the one driver-rows → DataFrame path ---------------
+
+_LOCAL_CASES = [
+    ([("a", 1, 2**40, 1.5, [1.0, -0.0])],
+     "s string, i int, l long, d double, v array<double>"),
+    ([(None, None, None, None, None), ("b", -3, 7, float("nan"), [None, 2.0])],
+     "s string, i int, l long, d double, v array<double>"),
+    ([], "s string, i int, l long, d double, v array<double>"),
+]
+
+
+@pytest.mark.parametrize("rows,ddl", _LOCAL_CASES, ids=["values", "nulls", "empty"])
+def test_local_frame_matches_python_rows_path(spark, rows, ddl):
+    from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert repr(got.collect()) == repr(want.collect())
+    # a StructType schema is the same frame as its DDL string
+    assert repr(local_frame(spark, rows, want.schema).collect()) == repr(
+        got.collect()
+    )
+
+
+def _leaf(df) -> str:
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.children().size() > 0:
+        plan = plan.children().head()
+    return plan.nodeName()
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {},
+        # the driver's default session: ANSI on, Arrow conversion off
+        {
+            "spark.sql.ansi.enabled": "true",
+            "spark.sql.execution.arrow.pyspark.enabled": "false",
+        },
+    ],
+    ids=["tuned", "default"],
+)
+def test_local_frame_is_a_local_relation(spark, conf):
+    from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        rows = [(i, f"v{i}") for i in range(100)]
+        df = local_frame(spark, rows, "k long, v string")
+        assert _leaf(df) == "LocalRelation"
+        assert [tuple(r) for r in df.collect()] == rows
+        # the Python-rows path this replaces: a pickled Python RDD
+        assert _leaf(spark.createDataFrame(rows, "k long, v string")) == "LogicalRDD"
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_local_frame_above_threshold_stays_on_the_jvm(spark):
+    """Past ``arrow.localRelationThreshold`` the rows become a JVM-side
+    ``LogicalRDD`` over Arrow batches — same rows, no Python RDD."""
+    from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        df = local_frame(spark, [(1,), (2,)], "k long")
+        assert _leaf(df) == "LogicalRDD"
+        assert sorted(r["k"] for r in df.collect()) == [1, 2]
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_no_create_dataframe_on_python_rows_outside_local_frame():
+    """Source guard: package code builds driver-side rows only through
+    ``sources.readers.local_frame``."""
+    import ast
+    from pathlib import Path
+
+    import udacity_dend_capstone_immigration_spark as pkg
+
+    root = Path(pkg.__file__).resolve().parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        if path.relative_to(root).as_posix() == "sources/readers.py":
+            fn = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+            )
+            allowed = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders

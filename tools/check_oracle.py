@@ -8,6 +8,8 @@ workload/base.py).
 
 Usage: python tools/check_oracle.py [--default-session] [sf_dir] [query ...]
 
+The session runs at ``local[$SPARK_GRAFT_CPUS]`` (default 8).
+
 ``--default-session`` builds the SparkSession the way the DRIVER does —
 plain ``builder.getOrCreate()`` with Spark 4 defaults (ANSI on, 200
 shuffle partitions, no tz pin) — instead of the repo's tuned factory.
@@ -19,6 +21,7 @@ is unverified: the workload must pin its own semantic confs via
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
@@ -63,13 +66,14 @@ def main() -> int:
         args = [a for a in args if a != "--default-session"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
     if default_session:
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[8]").getOrCreate()
+        spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
     else:
-        spark = get_spark_session(master="local[8]", shuffle_partitions=8)
+        spark = get_spark_session(master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in STAR_TABLES:

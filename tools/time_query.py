@@ -5,12 +5,15 @@ to in-suite timings, then runs each named query ``--reps`` times
 (noop sink) and prints per-rep and min timings.
 
 Usage: python tools/time_query.py [--reps 3] [--sf-dir DIR] query [query ...]
+
+The session runs at ``local[$SPARK_GRAFT_CPUS]`` (default 32, as in bench.py).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -29,13 +32,14 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="time-query",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
-            # mirror bench.py: 32 task threads need more than the 1g
+            # mirror bench.py: many task threads need more than the 1g
             # default heap for the sort-merge verify joins
             "spark.driver.memory": "8g",
         },

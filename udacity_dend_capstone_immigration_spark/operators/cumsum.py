@@ -69,6 +69,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+
 _PID = "_rsum_pid"
 #: unit-separator: never collides with real key text
 _SEP = "\x1f"
@@ -233,7 +235,8 @@ def _range_shape(
         # per-group total just repeats per partition-run) as a
         # broadcast-joined frame instead of a create_map literal
         spark = df.sparkSession
-        off_df = spark.createDataFrame(
+        off_df = local_frame(
+            spark,
             [
                 (pid, g, off, totals[g])
                 for (pid, g), off in offsets.items()

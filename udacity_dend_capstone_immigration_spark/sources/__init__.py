@@ -4,6 +4,7 @@ from udacity_dend_capstone_immigration_spark.sources.readers import (
     read_parquet,
     from_pairs,
     load_star,
+    local_frame,
 )
 from udacity_dend_capstone_immigration_spark.sources.sas7bdat import read_sas7bdat, sas7bdat_schema
 from udacity_dend_capstone_immigration_spark.sources.sas_labels import parse_sas_labels
@@ -19,6 +20,7 @@ __all__ = [
     "read_parquet",
     "from_pairs",
     "load_star",
+    "local_frame",
     "parse_sas_labels",
     "read_sas7bdat",
     "sas7bdat_schema",

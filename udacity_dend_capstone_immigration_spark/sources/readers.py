@@ -62,6 +62,41 @@ def read_csv_with_schema(
     return spark.read.csv(path, sep=sep, header=header, schema=schema)
 
 
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: str | StructType,
+) -> DataFrame:
+    """The one way to turn driver-side rows into a DataFrame.
+
+    ``rows`` are positional tuples (``Row`` objects qualify) in
+    ``schema`` order; ``schema`` is a DDL string or a ``StructType``.
+    The rows travel as one ``pyarrow.Table``: Spark plans it as a
+    ``LocalRelation`` (below ``spark.sql.execution.arrow.
+    localRelationThreshold``) or a JVM-side ``LogicalRDD`` above it —
+    never the pickled Python RDD that ``createDataFrame(<list>)``
+    builds, whose every scan (each broadcast of a 5-row dim included)
+    runs a job through a Python worker. A ``LocalRelation`` also
+    carries exact size statistics, so Catalyst can plan small frames
+    as broadcast builds on its own, and the optimizer folds filters and
+    projections over it into the rows (no Filter node is left for
+    rules such as dynamic partition pruning to key on).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = [
+        pa.array([r[i] for r in rows], type=field.type)
+        for i, field in enumerate(arrow_schema)
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def from_pairs(
     spark: SparkSession,
     pairs: Iterable[tuple[str, str]],
@@ -75,7 +110,7 @@ def from_pairs(
     schema = StructType()
     for name in col_names:
         schema = schema.add(name, "string")
-    return spark.createDataFrame(list(pairs), schema=schema)
+    return local_frame(spark, pairs, schema)
 
 
 def first_available(spark: SparkSession, candidates: Sequence[tuple[str, str]]) -> DataFrame:

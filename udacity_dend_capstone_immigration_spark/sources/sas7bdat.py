@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+
 
 def _discover(path: str) -> list[str]:
     if os.path.isdir(path):
@@ -97,7 +99,7 @@ def read_sas7bdat(
     schema = sas7bdat_schema(files[0])
     names = [f.name for f in schema.fields]
 
-    paths_df = spark.createDataFrame([(f,) for f in files], "path string").repartition(
+    paths_df = local_frame(spark, [(f,) for f in files], "path string").repartition(
         len(files), "path"
     )
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.operators.asof import asof_join
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import dsum, query, sql_dsum, table
 
 
@@ -751,10 +752,10 @@ def events_heavy_hitters_cms(spark, sf_dir):
 # of a 100 TB store in production. The oracle states the same join
 # aggregate over the original parquet, proving the partitioned
 # write→DPP-join→aggregate cycle lossless.
-#: one partitioned-fact staging dir per process, OVERWRITTEN each
-#: invocation and swept at exit — a fresh mkdtemp per run would leak a
-#: full events copy every driver/bench/pytest invocation (the
-#: bucketed_join_roundtrip accumulation class).
+#: one staging dir (partitioned fact + dim table) per process,
+#: OVERWRITTEN each invocation and swept at exit — a fresh mkdtemp per
+#: run would leak a full events copy every driver/bench/pytest
+#: invocation (the bucketed_join_roundtrip accumulation class).
 _DPP_OUT: list = []
 
 
@@ -786,21 +787,31 @@ def events_dpp_partitioned_join(spark, sf_dir):
     from udacity_dend_capstone_immigration_spark.sources.writers import write_parquet
 
     write_parquet(
-        ev.select("event_id", "event_type", "value"), out, partition_by=("event_type",)
+        ev.select("event_id", "event_type", "value"),
+        f"{out}/fact",
+        partition_by=("event_type",),
     )
-    fact = spark.read.parquet(out)
+    fact = spark.read.parquet(f"{out}/fact")
     # the dim: every type labeled; only the predicate on the DIM decides
-    # which fact partitions exist in the plan's runtime filter
-    dim = spark.createDataFrame(
-        [
-            ("click", "engagement"),
-            ("view", "engagement"),
-            ("purchase", "conversion"),
-            ("signup", "conversion"),
-            ("error", "ops"),
-        ],
-        "event_type string, category string",
+    # which fact partitions exist in the plan's runtime filter. It is a
+    # TABLE, as in a star schema: over a local relation the optimizer
+    # folds the category filter into the literal rows, and DPP only
+    # fires on a build side that still carries a selective Filter.
+    write_parquet(
+        local_frame(
+            spark,
+            [
+                ("click", "engagement"),
+                ("view", "engagement"),
+                ("purchase", "conversion"),
+                ("signup", "conversion"),
+                ("error", "ops"),
+            ],
+            "event_type string, category string",
+        ),
+        f"{out}/dim",
     )
+    dim = spark.read.parquet(f"{out}/dim")
     joined = fact.join(
         F.broadcast(dim.where(F.col("category") == "engagement")), "event_type"
     )

@@ -51,6 +51,7 @@ from udacity_dend_capstone_immigration_spark.operators.curation import (
     chunk_documents,
     chunk_token_rows,
 )
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 from udacity_dend_capstone_immigration_spark.workload.base import table
 from udacity_dend_capstone_immigration_spark.workload.dedupstore import (
@@ -89,8 +90,8 @@ def build_chunk_store(
     ch = chunk_documents(docs, "doc_id", "text", size=size, stride=stride)
     ch = ch.withColumn("h_pt", _hex_bucket(F.col("chunk_hash"), n_buckets))
     write_table(ch, f"{out_dir}/chunks", partition_by=["h_pt"])
-    meta = spark.createDataFrame(
-        [(size, stride, n_buckets)], "size int, stride int, n_buckets int"
+    meta = local_frame(
+        spark, [(size, stride, n_buckets)], "size int, stride int, n_buckets int"
     )
     write_table(meta, f"{out_dir}/meta")
     return out_dir
@@ -754,9 +755,11 @@ def chunk_tf_knn(spark, sf_dir):
         .collect()
     )
     if not q_rows:  # empty serving batch: empty result, stable schema
-        return spark.createDataFrame(
-            [], "qid long, qidx int, cid long, cidx int, dot long, "
-                "cos_sim double, rn int"
+        return local_frame(
+            spark,
+            [],
+            "qid long, qidx int, cid long, cidx int, dot long, "
+            "cos_sim double, rn int",
         )
     memo0: dict = {}
     q_keys = sorted((int(r["doc_id"]), int(r["chunk_idx"])) for r in q_rows)

@@ -24,6 +24,7 @@ from udacity_dend_capstone_immigration_spark.operators.curation import (
     quota_per_group,
 )
 from udacity_dend_capstone_immigration_spark.operators.dedup import shingle_rows
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import query, sql_dsum, table
 from udacity_dend_capstone_immigration_spark.workload.textops import NORM, TOKS
 
@@ -650,7 +651,7 @@ def corpus_epoch_shuffle(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    epochs = docs.sparkSession.createDataFrame([(1,), (2,)], "epoch int")
+    epochs = local_frame(docs.sparkSession, [(1,), (2,)], "epoch int")
     keyed = docs.crossJoin(F.broadcast(epochs)).select(
         "epoch",
         "doc_id",
@@ -803,7 +804,8 @@ def quality_perceptron_train(spark, sf_dir):
     oracle's unrolled update chain."""
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") % 4 != 0)
     rows, _ = _pct_train(spark, _pct_features(docs))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "iteration int, b bigint, w_len bigint, w_stop bigint,"
         " w_punct bigint, train_errors bigint",

@@ -75,6 +75,7 @@ from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.functions.text import doc_fingerprint
 from udacity_dend_capstone_immigration_spark.operators.dedup import shingle_rows
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 from udacity_dend_capstone_immigration_spark.workload.base import query, table
 from udacity_dend_capstone_immigration_spark.workload.textops import (
@@ -151,8 +152,8 @@ def build_dedup_index(
     write_table(fp, f"{out_dir}/fingerprints", partition_by=["fp_pt"])
     sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     write_table(sizes, f"{out_dir}/doc_sizes")
-    meta = spark.createDataFrame(
-        [(k, cap, n_buckets)], "k int, cap int, n_buckets int"
+    meta = local_frame(
+        spark, [(k, cap, n_buckets)], "k int, cap int, n_buckets int"
     )
     write_table(meta, f"{out_dir}/meta")
     return out_dir
@@ -603,7 +604,7 @@ def fold_dedup_index(spark: SparkSession, index_dir: str) -> None:
     for rel, cols, pby in (
         ("shingle_index", ["g", "cid", "g_pt"], ["g_pt"]),
         ("shingle_df", ["g", "df", "g_pt"], ["g_pt"]),
-        ("fingerprints", ["fp", "fp_pt"], ["fp_pt"]),
+        ("fingerprints", ["fp", "cid", "fp_pt"], ["fp_pt"]),
         ("doc_sizes", ["doc_id", "n"], None),
     ):
         droot = f"{index_dir}/{rel}_delta"

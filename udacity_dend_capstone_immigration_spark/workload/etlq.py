@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.plans.immigration_etl import run_pipeline, DEMOGRAPHICS_SCHEMA
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import query, table
 
 #: Miniature SAS proc-format labels (same structure as the reference's
@@ -239,7 +240,7 @@ def immigration_etl_fact(spark, sf_dir):
     ``entry_date`` etc. ride through the 19-column projection; the joins
     are the reference's cross-type string-code↔double comparisons."""
     staging = _staging(spark, sf_dir)
-    demographics = spark.createDataFrame([], DEMOGRAPHICS_SCHEMA)
+    demographics = local_frame(spark, [], DEMOGRAPHICS_SCHEMA)
     result = run_pipeline(spark, staging, demographics, LABELS_TEXT, compat=True)
     return result.fact
 

@@ -185,8 +185,7 @@ def corpus_pipeline_served(spark, sf_dir):
     # Catalyst estimate — same per-row width as the scored rows the
     # window sorts, scales with the corpus, and unlike the scored
     # frame's own estimate it is neither explode-blind (under) nor
-    # LogicalRDD-pinned at Long.MaxValue (over). A/B: see
-    # OPTIMIZATION_r17.md (session 3).
+    # LogicalRDD-pinned at Long.MaxValue (over).
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
         WINDOW_MAX_BYTES,
         _estimated_bytes,

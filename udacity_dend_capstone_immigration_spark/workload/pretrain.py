@@ -16,6 +16,7 @@ from udacity_dend_capstone_immigration_spark.workload.base import read_parquet_m
 from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.functions.text import tokenize
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import ORACLES, query, table
 from udacity_dend_capstone_immigration_spark.workload.textops import TOKS
 
@@ -254,6 +255,10 @@ def _bpe_round_ctes(r: int) -> str:
     )"""
 
 
+#: the learned merge table's schema (rank order = merge_round)
+_MERGES_SCHEMA = "merge_round int, lft string, rgt string, merged string, cnt bigint"
+
+
 @query(
     "bpe_train_merges",
     oracle=f"""
@@ -283,9 +288,7 @@ def bpe_train_merges(spark, sf_dir):
     rounds emit nothing — exactly as the oracle's empty best{{r}} CTEs
     do."""
     merges, _ = _bpe_train(spark, table(spark, sf_dir, "documents"))
-    return spark.createDataFrame(
-        merges, "merge_round int, lft string, rgt string, merged string, cnt bigint"
-    )
+    return local_frame(spark, merges, _MERGES_SCHEMA)
 
 
 def _vocab_partitions(docs) -> int:
@@ -519,8 +522,8 @@ def _bpe_train(spark, docs):
         rows = [(r["term"], int(r["cnt"])) for r in vocab.collect()]
         if len(rows) <= _BPE_DRIVER_MAX_VOCAB:
             merges, words_rows = _bpe_train_local(rows)
-            words = spark.createDataFrame(
-                words_rows, "term string, cnt bigint, syms array<string>"
+            words = local_frame(
+                spark, words_rows, "term string, cnt bigint, syms array<string>"
             )
             return merges, words
     words0 = _bpe_vocab(docs)
@@ -604,9 +607,7 @@ def build_bpe_store(spark, docs, out_dir: str) -> str:
 
     merges, words = _bpe_train(spark, docs)
     write_table(
-        spark.createDataFrame(
-            merges, "merge_round int, lft string, rgt string, merged string, cnt bigint"
-        ),
+        local_frame(spark, merges, _MERGES_SCHEMA),
         f"{out_dir}/merges",
     )
     write_table(words.select("term", "cnt", "syms"), f"{out_dir}/encoded_vocab")

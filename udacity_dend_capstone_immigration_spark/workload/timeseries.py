@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import ORACLES, query, table
 
 #: 1 hour in microseconds — Spark's rangeBetween needs a numeric order
@@ -921,7 +922,7 @@ def prune_feature_snapshots(spark, store: str, keep_days: int) -> list:
     # marker BEFORE the drops: a crash here is conservative (marker +
     # extra history), never a silent hole (history gone, no marker)
     write_parquet(
-        spark.createDataFrame([(floor,)], "floor string"), f"{store}/retention"
+        local_frame(spark, [(floor,)], "floor string"), f"{store}/retention"
     )
     for d in old:
         p = os.path.join(snap_dir, f"feature_date={esc(d)}")

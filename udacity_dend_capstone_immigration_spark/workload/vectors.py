@@ -17,6 +17,7 @@ from udacity_dend_capstone_immigration_spark.operators.similarity import (
     cosine_pairs_above_arrow,
     signbit_lsh_knn,
 )
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import (
     ORACLES,
     davg,
@@ -364,7 +365,8 @@ def _ivf_train(emb, n_cells=None):
             )
         ]
         cb = Codebook(rows)
-    cents_df = spark.createDataFrame(
+    cents_df = local_frame(
+        spark,
         [(int(r[0]), [float(x) for x in r[1]]) for r in rows],
         "cent_id long, cent_emb array<double>",
     )
@@ -1001,10 +1003,10 @@ def _served_probe_setup(spark, index_dir: str, emb):
 
         (probes_df, probed_cells, q_df)
 
-    with BOTH decision frames as local relations — the serving plan
-    then scans ONLY the index store: no crossJoin+window probe job, no
-    centroid-collect job, and no second embeddings scan for the query
-    side (the pre-r17 shape paid ~0.5s of job overhead per serve for
+    with BOTH decision frames as local relations (`local_frame`) — the
+    serving plan then scans ONLY the index store: no crossJoin+window
+    probe job, no centroid-collect job, and no second embeddings scan
+    for the query side (the pre-r17 shape paid ~0.5s of job overhead per serve for
     ≤160 probe rows). Ranking math is bit-compatible with `_ivf_probes`
     per the `_local_probe_rows` contract."""
     from pyspark.sql.types import LongType, StructField, StructType
@@ -1019,14 +1021,14 @@ def _served_probe_setup(spark, index_dir: str, emb):
     ]
     probe_rows = _local_probe_rows(q_rows, cent_rows)
     probed = sorted({c for _, c in probe_rows})
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell long")
+    probes = local_frame(spark, probe_rows, "query_id long, cell long")
     q_schema = StructType(
         [
             StructField("query_id", LongType()),
             StructField("q_emb", emb.schema["embedding"].dataType),
         ]
     )
-    q = spark.createDataFrame(q_rows, q_schema)
+    q = local_frame(spark, q_rows, q_schema)
     return probes, probed, q
 
 
@@ -1131,7 +1133,8 @@ def build_ivfpq_index(spark, sf_dir, out_dir: str, emb=None, residual: bool = Fa
         assigned = assign_nearest_arrow(emb, cb, "vec_id", keep_embedding=True)
         codes = pq_encode(assigned, pq_cbs, passthrough=("cell",))
     write_table(cents, f"{out_dir}/ivf_centroids")
-    books = spark.createDataFrame(
+    books = local_frame(
+        spark,
         [
             (j, int(cid), [float(x) for x in row])
             for j, bcb in enumerate(pq_cbs)
@@ -1324,7 +1327,8 @@ def build_ivf_sq8_index(spark, sf_dir, out_dir: str, emb=None) -> str:
     assigned = assign_nearest_arrow(emb, cb, "vec_id", keep_embedding=True)
     codes = sq8_encode(assigned, mn, mx, passthrough=("cell",))
     write_table(cents, f"{out_dir}/ivf_centroids")
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [(int(r["dim"]), float(r["mn"]), float(r["mx"])) for r in srows],
         "dim long, mn double, mx double",
     )
@@ -1842,7 +1846,7 @@ def delete_from_index(spark, index_dir: str, ids) -> None:
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
     if isinstance(ids, list):
-        df = spark.createDataFrame([(int(i),) for i in ids], "vec_id long")
+        df = local_frame(spark, [(int(i),) for i in ids], "vec_id long")
     else:
         df = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id"))
     write_table(df, f"{index_dir}/deleted_ids", mode="append")
@@ -3998,7 +4002,7 @@ def ann_centroid_drift_report(spark, sf_dir):
     report = centroid_drift_report(spark, idx)
     rows = report.collect()
     assert any(r["retrain_due"] for r in rows), rows
-    return spark.createDataFrame(rows, report.schema)
+    return local_frame(spark, rows, report.schema)
 
 
 # --- SQ8 reindex roundtrip (staged r15, registered r16; stage-gate:
