@@ -29,7 +29,7 @@ FLAGSHIP = "top_nations_by_orders"
 #: probe/query-side shuffles into broadcasts; (b) the 8 rows whose
 #: newest official row is r11 (deferred from r17); (c) as many of the
 #: r12 rows as fit, in registry order.
-#: ROTATION NOTE for r19: the 14 r12 rows left out here come first
+#: ROTATION NOTE for r19: the 15 r12 rows left out here come first
 #: after r19's own plan-changed set, then the r13 rows.
 SHOWCASE = [
     # (a) r18 plan-changed (see PLAN_CHANGED below)
@@ -57,6 +57,7 @@ SHOWCASE = [
     "bpe_train_merges",
     "bpe_encode_corpus",
     "corpus_examples_packed",
+    "dedup_index_revive_roundtrip",
     # (b) the r11 rows deferred from r17
     "distinct_counts_per_segment",
     "dedup_exact_rows",
@@ -84,7 +85,6 @@ SHOWCASE = [
     "events_time_weighted_avg",
     "events_ohlc_bars",
     "events_heavy_hitters_cms",
-    "events_zorder_box_scan",
 ]
 
 #: Queries whose plan, oracle, or constructed result changed in r18
@@ -103,6 +103,9 @@ SHOWCASE = [
 #: instead of the range shape an unknown size forced; and
 #: ``events_dpp_partitioned_join`` reads its dim as a parquet table (a
 #: local relation's filter folds away, and DPP would not fire).
+#: Then the store-commit change (same diff, parent against it): the
+#: revival in ``dedup_index_revive_roundtrip`` now commits as a fold,
+#: so its served read has no tombstone anti-joins left.
 PLAN_CHANGED: list[str] = [
     "knn_ivf",
     "ann_ivf_recall",
@@ -128,6 +131,7 @@ PLAN_CHANGED: list[str] = [
     "bpe_train_merges",
     "bpe_encode_corpus",
     "corpus_examples_packed",
+    "dedup_index_revive_roundtrip",
 ]
 
 

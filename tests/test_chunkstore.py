@@ -3,6 +3,7 @@ candidates): every oracle proven cross-engine at sf0.001 BEFORE
 registration, the r14→r15→r16 staging pattern."""
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -108,8 +109,8 @@ def test_chunk_store_tombstone_serve_equals_fold_and_plan_noop(spark):
     """(a) before any delete, the served read is a BARE store scan (no
     anti-join in the plan); (b) tombstone-serve ≡ post-fold serve,
     row-for-row; (c) fold is idempotent (second run is a no-op); (d) a
-    purge that empties every partition drops the directories and a
-    stage orphan from a torn run is cleared."""
+    purge that empties every partition drops the directories and an
+    unmarked stage from a crashed run is swept."""
     import os
     import tempfile
 
@@ -132,10 +133,11 @@ def test_chunk_store_tombstone_serve_equals_fold_and_plan_noop(spark):
     served_before = sorted(
         map(tuple, C.read_chunk_store_served(spark, store).collect())
     )
-    # (d-pre) torn-run stage orphan must not break the fold
-    os.makedirs(f"{store}/_fold_stage/h_pt=junk", exist_ok=True)
+    # (d-pre) a stage a crash left before its marker must not break
+    # the fold, which sweeps it
+    os.makedirs(f"{store}/_stage_orphan/chunks/h_pt=junk", exist_ok=True)
     C.fold_chunk_store_tombstones(spark, store)
-    assert not os.path.isdir(f"{store}/_fold_stage")
+    assert not [e for e in os.listdir(store) if e.startswith("_stage_")]
     assert not os.path.isdir(f"{store}/deleted_docs")
     served_after = sorted(
         map(tuple, C.read_chunk_store_served(spark, store).collect())
@@ -151,6 +153,70 @@ def test_chunk_store_tombstone_serve_equals_fold_and_plan_noop(spark):
     C.fold_chunk_store_tombstones(spark, store)
     parts = [p for p in os.listdir(f"{store}/chunks") if p.startswith("h_pt=")]
     assert parts == []
+
+
+def _served_chunks(spark, store):
+    from udacity_dend_capstone_immigration_spark.workload import chunkstore as C
+
+    return sorted(map(tuple, C.read_chunk_store_served(spark, store).collect()))
+
+
+def test_tombstone_fold_crash_keeps_survivors(spark):
+    """Regression: the tombstone fold deleted each live ``h_pt=``
+    partition before renaming its staged survivors into place, and a
+    re-run cleared the stage first, so a crash between the two lost that
+    partition's surviving rows for good. Crashed at each of its first
+    mutations, the fold must leave the served rows whole, before and
+    after a re-run."""
+    import tempfile
+
+    from tests.fixtures.crash import crash_matrix
+    from udacity_dend_capstone_immigration_spark.workload import chunkstore as C
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(40)
+    store = C.build_chunk_store(
+        spark, docs, tempfile.mkdtemp(prefix="chunk_store_crash_t_")
+    )
+    dead = docs.select("doc_id").orderBy("doc_id").limit(2)
+    C.delete_docs_from_chunk_store(spark, store, dead)
+    crash_matrix(
+        store,
+        lambda d: C.fold_chunk_store_tombstones(spark, d),
+        lambda d: _served_chunks(spark, d),
+        points=(1, 2, 3),
+        rerun=True,
+    )
+
+
+@pytest.mark.slow
+def test_every_chunk_store_rewrite_survives_a_crash_at_every_step(spark, tmp_path):
+    """Delta fold and tombstone fold, each crashed once before its marker
+    and at every mutation after it: the store serves exactly the state
+    before or after the call."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from tests.fixtures.crash import crash_matrix
+    from udacity_dend_capstone_immigration_spark.workload import chunkstore as C
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
+    store = C.build_chunk_store(
+        spark,
+        docs.where(F.col("doc_id") % 3 != 0),
+        tempfile.mkdtemp(prefix="chunk_store_matrix_t_"),
+    )
+    src = str(tmp_path / "docs")
+    docs.where(F.col("doc_id") % 3 == 0).select("doc_id", "text").write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    C.stream_append_to_chunk_store(spark, stream, store, str(tmp_path / "ck"))
+    C.delete_docs_from_chunk_store(
+        spark, store, docs.where(F.col("doc_id") % 4 == 0).select("doc_id")
+    )
+    served = lambda d: _served_chunks(spark, d)  # noqa: E731
+    n_delta = crash_matrix(store, lambda d: C.fold_chunk_store_delta(spark, d), served)
+    n_tomb = crash_matrix(store, lambda d: C.fold_chunk_store_tombstones(spark, d), served)
+    assert n_delta >= 4 and n_tomb > n_delta
 
 
 def test_documents_stream_chunk_append_stage_gate(spark):

@@ -93,6 +93,45 @@ def test_append_cap_crossing_tombstones_then_fold(spark, store):
     assert raw == posts
 
 
+def _served_state(spark, d):
+    """Every relation the store serves: postings, fingerprints, doc
+    sizes and the summed shingle stats (rows kept as lists, so a
+    doubled row shows)."""
+    from udacity_dend_capstone_immigration_spark.workload.dedupstore import _union_delta
+
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    stats = (
+        _union_delta(spark, d, "shingle_df", ["g", "df"])
+        .groupBy("g")
+        .agg(F.sum("df").alias("df"))
+        .where("df != 0")
+    )
+    return (
+        rows(read_dedup_shingle_index(spark, d)),
+        rows(read_dedup_fingerprints(spark, d)),
+        rows(read_dedup_doc_sizes(spark, d)),
+        rows(stats),
+    )
+
+
+def test_fold_crash_between_swap_renames_keeps_relation(spark, store):
+    """Regression: the fold swapped each relation in with two renames
+    (live away, staged in), and nothing restored the moved-away copy,
+    so a crash between them left the relation missing. Crashed at each
+    of its first mutations, the fold must leave every served relation
+    whole, before and after a re-run."""
+    from tests.fixtures.crash import crash_matrix
+
+    append_to_dedup_index(spark, _docs(spark, BATCH), store)
+    crash_matrix(
+        store,
+        lambda d: fold_dedup_index(spark, d),
+        lambda d: _served_state(spark, d),
+        points=(1, 2, 3),
+        rerun=True,
+    )
+
+
 def test_append_batch_only_overcap_shingle_never_indexed(spark, store):
     # a shingle over the cap purely WITHIN one batch (df_m=0, df_b>cap)
     batch = [(10 + i, f"q r s t{i} u{i}") for i in range(5)]  # 'q r s' df_b=5
@@ -380,3 +419,30 @@ def test_fold_applies_deletes_physically(spark, tmp_path):
         r["cid"] for r in spark.read.parquet(f"{d}/fingerprints").collect()
     }
     assert raw_fp_cids == {1, 2, 3}
+
+
+@pytest.mark.slow
+def test_every_dedup_store_rewrite_survives_a_crash_at_every_step(spark, tmp_path):
+    """Fold (streamed deltas, cap-crossing and doc tombstones pending)
+    and revival, each crashed once before its marker and at every
+    mutation after it: the store serves exactly the state before or
+    after the call."""
+    from tests.fixtures.crash import crash_matrix
+
+    d = str(tmp_path / "idx")
+    build_dedup_index(spark, _docs(spark, _DEL_CORPUS), d, cap=3)
+    live = [r for r in _DEL_CORPUS if r[0] not in (4, 5)]
+    delete_from_dedup_index(
+        spark, _docs(spark, [r for r in _DEL_CORPUS if r[0] in (4, 5)]), d
+    )
+    n_revive = crash_matrix(
+        d,
+        lambda x: revive_shingles(spark, x, _docs(spark, live)),
+        lambda x: _served_state(spark, x),
+    )
+    _stream_append(spark, tmp_path, d, [(6, "c x1 y1 z6 w6"), (7, "b c x2 q7 r7")], "w1")
+    append_to_dedup_index(spark, _docs(spark, [(8, "a b c x8 y8")]), d)
+    n_fold = crash_matrix(
+        d, lambda x: fold_dedup_index(spark, x), lambda x: _served_state(spark, x)
+    )
+    assert n_fold >= 8 and n_revive >= 8

@@ -139,9 +139,8 @@ def test_retention_marker_lands_before_history_drops(spark, tmp_path, monkeypatc
     real_rmtree = shutil.rmtree
 
     def spying_rmtree(path, *a, **k):
-        # live history partitions only — the fold swap's '_'-prefixed
-        # staging/retired siblings are part of the floor rewrite, not
-        # history drops, and legally precede the marker
+        # live history partitions only — the commit's '_'-prefixed
+        # stage is part of the floor rewrite, not a history drop
         if os.path.basename(str(path)).startswith("feature_date="):
             seen.setdefault(
                 "marker_at_first_drop",
@@ -149,12 +148,18 @@ def test_retention_marker_lands_before_history_drops(spark, tmp_path, monkeypatc
             )
         return real_rmtree(path, *a, **k)
 
-    # prune imports shutil inside the function, so patching the module
-    # attribute is what its local import resolves
+    # the store commit calls shutil.rmtree through the module, so
+    # patching the module attribute is what it resolves
     monkeypatch.setattr(shutil, "rmtree", spying_rmtree)
     dropped = prune_feature_snapshots(spark, store, keep_days=4)
     assert dropped
     assert seen["marker_at_first_drop"] is True
+
+
+def _pruned_state(spark, store):
+    """What the store serves: every snapshot row and the floor."""
+    rows = sorted(map(tuple, read_feature_snapshots(spark, store).collect()))
+    return rows, feature_retention_floor(spark, store)
 
 
 def test_prune_floor_swap_survives_torn_crash(spark):
@@ -162,51 +167,43 @@ def test_prune_floor_swap_survives_torn_crash(spark):
     partition in place — a crash mid-write would destroy the floor
     day's original rows while older partitions survive, and the re-run
     would fold each floor-day-active user's SECOND-newest state into
-    the floor. With staging-then-rename, both torn states (staged fold
-    orphaned pre-swap; floor parked at the retired name mid-swap) roll
-    back on the next read/prune and a re-run reproduces the un-torn
+    the floor. The prune is one store commit: crashed on its marker
+    (the fold staged, nothing swapped), with the floor partition moved
+    aside, or with the fold moved in, the next read serves the
+    un-pruned or the fully pruned store, and a re-run lands the un-torn
     result bit-for-bit."""
     import shutil
 
-    from udacity_dend_capstone_immigration_spark.workload.timeseries import (
-        _recover_snapshot_fold,
-    )
-
-    # the expected end state, from an untorn prune on a twin store
-    ref = build_feature_store(spark, SF_DIR)
-    prune_feature_snapshots(spark, ref, keep_days=4)
-    expect = sorted(map(tuple, read_feature_snapshots(spark, ref).collect()))
+    from tests.fixtures.crash import crash_matrix
 
     store = build_feature_store(spark, SF_DIR)
-    snap_dir = f"{store}/snapshots"
-    days = sorted(
-        e.split("=", 1)[1]
-        for e in os.listdir(snap_dir)
-        if e.startswith("feature_date=")
+    n = crash_matrix(
+        store,
+        lambda d: prune_feature_snapshots(spark, d, keep_days=4),
+        lambda d: _pruned_state(spark, d),
+        points=(1, 2, 3),
+        rerun=True,
     )
-    floor = days[-4]
-    live = f"{snap_dir}/feature_date={floor}"
-    orig_rows = sorted(map(tuple, spark.read.parquet(live).collect()))
-
-    # torn state 1: staged fold written, crash before any rename
-    os.makedirs(f"{snap_dir}/_feature_date={floor}.staging/x", exist_ok=True)
-    # torn state 2 (separately): floor parked at the retired name
-    os.rename(live, f"{snap_dir}/_feature_date={floor}.old")
-    # a plain read never sees torn state ('_'-prefix is invisible) —
-    # and recovery restores the live floor partition from the parked copy
-    _recover_snapshot_fold(snap_dir)
-    assert not os.path.isdir(f"{snap_dir}/_feature_date={floor}.staging")
-    assert not os.path.isdir(f"{snap_dir}/_feature_date={floor}.old")
-    assert sorted(map(tuple, spark.read.parquet(live).collect())) == orig_rows
-
-    # the re-run (prune recovers internally too) lands the exact
-    # un-torn result
-    dropped = prune_feature_snapshots(spark, store, keep_days=4)
-    assert dropped == days[:-4]
-    got = sorted(map(tuple, read_feature_snapshots(spark, store).collect()))
-    assert got == expect
+    assert n > 3
     shutil.rmtree(store, ignore_errors=True)
-    shutil.rmtree(ref, ignore_errors=True)
+
+
+@pytest.mark.slow
+def test_prune_survives_a_crash_at_every_step(spark):
+    """The prune crashed once before its marker and at every mutation
+    after it: the store serves exactly the un-pruned or the pruned
+    state, never history gone without its floor recorded."""
+    import shutil
+
+    from tests.fixtures.crash import crash_matrix
+
+    store = build_feature_store(spark, SF_DIR)
+    crash_matrix(
+        store,
+        lambda d: prune_feature_snapshots(spark, d, keep_days=4),
+        lambda d: _pruned_state(spark, d),
+    )
+    shutil.rmtree(store, ignore_errors=True)
 
 
 def test_served_feature_store_memoized(spark):

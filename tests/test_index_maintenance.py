@@ -14,6 +14,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from tests.fixtures.crash import Crash, copy_store, crash_at, crash_matrix
+from udacity_dend_capstone_immigration_spark.sources.store import MARKER
 from udacity_dend_capstone_immigration_spark.workload import vectors as V
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -217,10 +219,21 @@ def test_stream_append_multibatch_exactly_once_and_fold(spark):
     shutil.rmtree(src, ignore_errors=True)
 
 
+def _served(spark, idx):
+    """(vec_id, cell) rows of the flat store's serving view."""
+    served = V.apply_tombstones(spark, idx, V.read_ivf_flat_store(spark, idx))
+    return sorted((r["vec_id"], r["cell"]) for r in served.select("vec_id", "cell").collect())
+
+
+def _stages(idx):
+    return [e for e in os.listdir(idx) if e.startswith("_stage_")]
+
+
 def test_compaction_crash_recovery_restores_old_dir(spark):
-    """A crash between the two swap renames leaves the store only in
-    `<store>.old` — the next compaction must RESTORE it (and sweep any
-    orphan staging), never delete the only copy."""
+    """A crash between the two swap renames of a compaction leaves the
+    live relation moved aside and the staged one not yet in place: the
+    next read must roll the commit forward, never lose the only copy;
+    the next compaction sweeps a stage that never got its marker."""
     import shutil
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
@@ -230,14 +243,117 @@ def test_compaction_crash_recovery_restores_old_dir(spark):
         spark, SF_DIR, tempfile.mkdtemp(prefix="ivfflat_crash_t_"), emb=emb
     )
     rows = _store_rows(spark, idx)
-    # simulate the mid-swap crash state: live renamed away, staging orphaned
-    os.rename(f"{idx}/ivf_vectors", f"{idx}/ivf_vectors.old")
-    os.makedirs(f"{idx}/_ivf_vectors_compact_orphan")
+    # mutation 1 lands the marker, 2 moves the live relation aside,
+    # 3 would move the compacted one in
+    with crash_at(idx, 3), pytest.raises(Crash):
+        V.compact_index_cells(spark, idx)
+    assert not os.path.isdir(f"{idx}/ivf_vectors")
+    assert _served(spark, idx) == rows
+    assert not os.path.isfile(f"{idx}/{MARKER}") and not _stages(idx)
+    os.makedirs(f"{idx}/_stage_orphan/ivf_vectors")
     V.compact_index_cells(spark, idx)
     assert _store_rows(spark, idx) == rows
-    assert not os.path.isdir(f"{idx}/ivf_vectors.old")
-    assert not os.path.isdir(f"{idx}/_ivf_vectors_compact_orphan")
+    assert not _stages(idx)
     shutil.rmtree(idx, ignore_errors=True)
+
+
+def test_bounded_compaction_crash_keeps_untouched_cells(spark):
+    """Regression: a bounded compaction moved every untouched cell into
+    its staging dir before the swap, and the next compaction's sweep
+    deleted every staging dir, so a crash inside that move loop lost
+    the cells already moved. Crashed at each of its first mutations,
+    the pass must leave the served rows whole, before and after a
+    re-run."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    idx = V.build_ivf_flat_index(
+        spark,
+        SF_DIR,
+        tempfile.mkdtemp(prefix="ivfflat_bndcrash_t_"),
+        emb=emb.where(F.col("vec_id") % 3 == 0),
+    )
+    V.append_to_ivf_flat_index(spark, emb.where(F.col("vec_id") % 3 != 0), idx)
+    touched = int(next(c for c, n in _files_per_cell(idx).items() if n > 1))
+    crash_matrix(
+        idx,
+        lambda d: V.compact_index_cells(spark, d, cells=[touched]),
+        lambda d: _served(spark, d),
+        points=(1, 2, 3),
+        rerun=True,
+    )
+
+
+@pytest.mark.slow
+def test_every_vector_store_rewrite_survives_a_crash_at_every_step(spark):
+    """Delta fold, full and bounded compaction, retrain and SQ8 reindex,
+    each crashed once before its marker and at every mutation after it:
+    the store serves exactly the state before or after the call."""
+    from udacity_dend_capstone_immigration_spark.operators.similarity import (
+        Codebook,
+        assign_nearest_arrow,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    dead = [int(r["vec_id"]) for r in emb.select("vec_id").limit(5).collect()]
+    flat = V.build_ivf_flat_index(
+        spark,
+        SF_DIR,
+        tempfile.mkdtemp(prefix="ivfflat_matrix_t_"),
+        emb=emb.where(F.col("vec_id") % 3 == 2),
+    )
+    V.append_to_ivf_flat_index(spark, emb.where(F.col("vec_id") % 3 == 1), flat)
+    cb = Codebook(
+        [(r["cent_id"], r["cent_emb"]) for r in spark.read.parquet(f"{flat}/ivf_centroids").collect()]
+    )
+    (
+        assign_nearest_arrow(emb.where(F.col("vec_id") % 3 == 0), cb, "vec_id", keep_embedding=True)
+        .withColumn("cell_pt", F.col("cell"))
+        .write.partitionBy("cell_pt")
+        .parquet(f"{flat}/ivf_vectors_delta/batch_pt=m-0")
+    )
+    V.delete_from_index(spark, flat, dead)
+    folded = copy_store(flat)
+    V.fold_index_delta(spark, folded)
+    cells = sorted({c for _, c in _served(spark, folded)})[:2]
+
+    def with_codebook(d):
+        served = _served(spark, d)  # recovers first
+        cents = sorted(
+            (r["cent_id"], tuple(r["cent_emb"]))
+            for r in spark.read.parquet(f"{d}/ivf_centroids").collect()
+        )
+        return served, cents
+
+    n = {
+        "fold": crash_matrix(flat, lambda d: V.fold_index_delta(spark, d), lambda d: _served(spark, d)),
+        "compact": crash_matrix(folded, lambda d: V.compact_index_cells(spark, d), lambda d: _served(spark, d)),
+        "bounded": crash_matrix(
+            folded, lambda d: V.compact_index_cells(spark, d, cells=cells), lambda d: _served(spark, d)
+        ),
+        "retrain": crash_matrix(flat, lambda d: V.retrain_ivf_flat_index(spark, d), with_codebook),
+    }
+
+    sq8 = V.build_ivf_sq8_index(
+        spark,
+        SF_DIR,
+        tempfile.mkdtemp(prefix="sq8_matrix_t_"),
+        emb=emb.where(F.col("vec_id") % 3 != 0),
+    )
+    V.delete_from_index(spark, sq8, dead)
+
+    def sq8_state(d):
+        served = V.apply_tombstones(spark, d, V.read_sq8_store(spark, d))
+        return (
+            sorted(tuple(r) for r in served.select("vec_id", "cell", "codes").collect()),
+            sorted(tuple(r) for r in spark.read.parquet(f"{d}/sq8_stats").collect()),
+        )
+
+    n["reindex"] = crash_matrix(sq8, lambda d: V.reindex_sq8_index(spark, d, emb), sq8_state)
+    # every rewrite commits through the marker, so each has several steps
+    assert all(k > 4 for k in n.values()), n
 
 
 def test_full_compaction_keeps_tombstones_while_delta_exists(spark):
@@ -529,95 +645,92 @@ def test_retrain_restores_fixed_point_and_retires_deltas(spark, tmp_path):
 
 def test_retrain_commit_marker_torn_crash_windows(spark):
     """r14 advice: the two-relation retrain swap must be ONE generation.
-    Three crash windows against the marker protocol:
+    Three crash windows of the retrain's store commit:
 
     1. crash AFTER the commit marker lands, BEFORE any swap — the next
        store read rolls the whole generation forward (both relations
-       from the stage, delta + tombstones retired);
+       from the stage, delta + tombstones dropped);
     2. crash MID roll-forward (centroids swapped, vectors not) — a new
        codebook must never serve over old cell assignments; recovery
        completes the vectors swap;
-    3. crash BEFORE the marker (orphan stage, no marker) — the
-       compaction sweeper rolls it back; the live store is untouched.
+    3. crash ON the marker (stage written, no marker) — the live store
+       is untouched and the next compaction sweeps the stage.
     """
-    import json
     import shutil
+
+    from udacity_dend_capstone_immigration_spark.operators.similarity import (
+        Codebook,
+        assign_nearest_arrow,
+    )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    old_half = emb.where(F.col("vec_id") % 2 == 0)
-    new_all = emb  # the "retrained" generation covers everything
+    base = V.build_ivf_flat_index(
+        spark,
+        SF_DIR,
+        tempfile.mkdtemp(prefix="ivfflat_torn_t_"),
+        emb=emb.where(F.col("vec_id") % 2 == 0),
+    )
+    # pending delta + tombstones the committed retrain must retire
+    cb = Codebook(
+        [(r["cent_id"], r["cent_emb"]) for r in spark.read.parquet(f"{base}/ivf_centroids").collect()]
+    )
+    (
+        assign_nearest_arrow(emb.where(F.col("vec_id") % 2 == 1), cb, "vec_id", keep_embedding=True)
+        .withColumn("cell_pt", F.col("cell"))
+        .write.partitionBy("cell_pt")
+        .parquet(f"{base}/ivf_vectors_delta/batch_pt=t-0")
+    )
+    V.delete_from_index(spark, base, [0])
+    expect = sorted(r["vec_id"] for r in emb.where(F.col("vec_id") != 0).select("vec_id").collect())
 
-    def torn_index(swap_centroids: bool):
-        idx = V.build_ivf_flat_index(
-            spark, SF_DIR, tempfile.mkdtemp(prefix="ivfflat_torn_t_"), emb=old_half
-        )
-        gen = V.build_ivf_flat_index(
-            spark, SF_DIR, tempfile.mkdtemp(prefix="ivfflat_gen_t_"), emb=new_all
-        )
-        # pending delta + tombstones the committed retrain must retire
-        os.makedirs(f"{idx}/ivf_vectors_delta/batch_pt=t-0", exist_ok=True)
-        shutil.copytree(
-            f"{idx}/ivf_vectors",
-            f"{idx}/ivf_vectors_delta/batch_pt=t-0",
-            dirs_exist_ok=True,
-        )
-        V.delete_from_index(spark, idx, [0])
-        stage = f"{idx}/_retrain_stage_torn"
-        os.makedirs(stage)
-        os.rename(f"{gen}/ivf_centroids", f"{stage}/ivf_centroids")
-        os.rename(f"{gen}/ivf_vectors", f"{stage}/ivf_vectors")
-        with open(f"{idx}/{V._RETRAIN_MARKER}", "w") as fh:
-            json.dump({"stage": "_retrain_stage_torn"}, fh)
-        if swap_centroids:  # window 2: first rename pair already done
-            os.rename(f"{idx}/ivf_centroids", f"{idx}/ivf_centroids.retired")
-            os.rename(f"{stage}/ivf_centroids", f"{idx}/ivf_centroids")
-        shutil.rmtree(gen, ignore_errors=True)
-        return idx
-
-    expect = sorted(r["vec_id"] for r in new_all.select("vec_id").collect())
-    for swap_centroids in (False, True):
-        idx = torn_index(swap_centroids)
+    # mutations: 1 marker, 2/3 centroids aside/in, 4/5 vectors aside/in
+    for k in (2, 4):
+        idx = copy_store(base)
+        with crash_at(idx, k), pytest.raises(Crash):
+            V.retrain_ivf_flat_index(spark, idx)
         served = V.read_ivf_flat_store(spark, idx)  # recovery on read
         assert sorted(r["vec_id"] for r in served.select("vec_id").collect()) == expect
-        assert not os.path.isfile(f"{idx}/{V._RETRAIN_MARKER}")
-        assert not os.path.isdir(f"{idx}/_retrain_stage_torn")
+        assert not os.path.isfile(f"{idx}/{MARKER}")
+        assert not _stages(idx)
         assert not os.path.isdir(f"{idx}/ivf_vectors_delta")  # no double-serve
         assert not os.path.isdir(f"{idx}/deleted_ids")  # retired in-generation
-        assert not os.path.isdir(f"{idx}/ivf_centroids.retired")
         # centroids and assignments come from the SAME generation: every
-        # served cell id exists in the swapped-in codebook
-        cents = {
-            r["cent_id"]
-            for r in spark.read.parquet(f"{idx}/ivf_centroids").collect()
-        }
-        cells = {r["cell"] for r in served.select("cell").distinct().collect()}
-        assert cells <= cents
+        # served vector sits in its nearest cell of the served codebook
+        cb = Codebook(
+            [(r["cent_id"], r["cent_emb"]) for r in spark.read.parquet(f"{idx}/ivf_centroids").collect()]
+        )
+        got = sorted(map(tuple, served.select("vec_id", "cell").collect()))
+        want = sorted(
+            map(tuple, assign_nearest_arrow(served.select("vec_id", "embedding"), cb, "vec_id").collect())
+        )
+        assert got == want
         shutil.rmtree(idx, ignore_errors=True)
 
-    # window 3: orphan stage, NO marker — pre-commit crash rolls back
-    idx = V.build_ivf_flat_index(
-        spark, SF_DIR, tempfile.mkdtemp(prefix="ivfflat_precommit_t_"), emb=old_half
-    )
-    rows = _store_rows(spark, idx)
-    os.makedirs(f"{idx}/_retrain_stage_orphan/ivf_vectors")
+    # window 3: no marker — the pre-commit crash rolls back
+    idx = copy_store(base)
+    rows = _served(spark, idx)
+    with crash_at(idx, 1), pytest.raises(Crash):
+        V.retrain_ivf_flat_index(spark, idx)
+    assert _stages(idx)
+    assert _served(spark, idx) == rows
     V.compact_index_cells(spark, idx)
-    assert not os.path.isdir(f"{idx}/_retrain_stage_orphan")
-    assert _store_rows(spark, idx) == rows
+    assert not _stages(idx)
+    assert _served(spark, idx) == rows
     shutil.rmtree(idx, ignore_errors=True)
+    shutil.rmtree(base, ignore_errors=True)
 
 
 def test_sq8_reindex_rebuilds_from_source_and_retires(spark):
     """r15: the compressed-layout 'reindex window' — SQ8 cannot
     Lloyd-retrain from its own lossy codes, so reindex reads the vector
     source-of-truth, applies pending tombstones, and swaps a whole new
-    generation (centroids + affine stats + codes) under the same commit
-    marker as the flat retrain. Asserts: live set exact, delta and
+    generation (centroids + affine stats + codes) in one store commit,
+    like the flat retrain. Asserts: live set exact, delta and
     tombstones retired in-generation, the swapped-in stats equal the
     live set's true per-dim min/max, and a committed-but-torn
     generation rolls forward on the next store read."""
-    import json
     import shutil
 
     import numpy as np
@@ -633,12 +746,13 @@ def test_sq8_reindex_rebuilds_from_source_and_retires(spark):
     os.makedirs(f"{idx}/sq8_codes_delta/batch_pt=t-0", exist_ok=True)
     dead = [int(r["vec_id"]) for r in emb.select("vec_id").limit(7).collect()]
     V.delete_from_index(spark, idx, dead)
+    torn = copy_store(idx)
 
     stats = V.reindex_sq8_index(spark, idx, emb)
     assert stats["n_vectors"] == emb.count() - len(dead)
     assert not os.path.isdir(f"{idx}/sq8_codes_delta")
     assert not os.path.isdir(f"{idx}/deleted_ids")
-    assert not os.path.isfile(f"{idx}/{V._RETRAIN_MARKER}")
+    assert not os.path.isfile(f"{idx}/{MARKER}")
     back = spark.read.parquet(f"{idx}/sq8_codes")
     assert back.count() == stats["n_vectors"]
     assert back.where(F.col("vec_id").isin(dead)).count() == 0
@@ -652,30 +766,16 @@ def test_sq8_reindex_rebuilds_from_source_and_retires(spark):
     mn, mx = V.load_sq8_stats(spark, f"{idx}/sq8_stats")
     assert np.allclose(mn, m.min(axis=0)) and np.allclose(mx, m.max(axis=0))
 
-    # torn committed generation (marker present, nothing swapped):
-    # the next SQ8 store read rolls it forward
-    gen = V.build_ivf_sq8_index(
-        spark, SF_DIR, tempfile.mkdtemp(prefix="sq8_gen_t_"), emb=corpus
-    )
-    stage = f"{idx}/_retrain_stage_torn"
-    os.makedirs(stage)
-    for rel in ("ivf_centroids", "sq8_stats", "sq8_codes"):
-        os.rename(f"{gen}/{rel}", f"{stage}/{rel}")
-    with open(f"{idx}/{V._RETRAIN_MARKER}", "w") as fh:
-        json.dump(
-            {
-                "stage": "_retrain_stage_torn",
-                "relations": ["ivf_centroids", "sq8_stats", "sq8_codes"],
-                "retire": ["sq8_codes_delta", "deleted_ids"],
-            },
-            fh,
-        )
-    served = V.read_sq8_store(spark, idx)
-    assert served.count() == corpus.count()  # the staged generation
-    assert not os.path.isfile(f"{idx}/{V._RETRAIN_MARKER}")
-    assert not os.path.isdir(stage)
+    # torn committed generation (marker present, nothing swapped): the
+    # next SQ8 store read rolls it forward
+    with crash_at(torn, 2), pytest.raises(Crash):
+        V.reindex_sq8_index(spark, torn, emb)
+    served = V.read_sq8_store(spark, torn)
+    assert served.count() == stats["n_vectors"]  # the staged generation
+    assert not os.path.isfile(f"{torn}/{MARKER}")
+    assert not _stages(torn)
     shutil.rmtree(idx, ignore_errors=True)
-    shutil.rmtree(gen, ignore_errors=True)
+    shutil.rmtree(torn, ignore_errors=True)
 
 
 def test_sq8_reindex_roundtrip_stage_gate(spark):

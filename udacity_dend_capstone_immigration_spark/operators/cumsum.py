@@ -95,7 +95,7 @@ def _cols(order_cols: list[Column | str]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
-def _estimated_bytes(df: DataFrame) -> int | None:
+def estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's sizeInBytes estimate for the optimized plan — file
     sizes scaled through projections/filters; no job runs. ``None``
     when the estimate is unavailable (caller treats as large)."""
@@ -157,7 +157,7 @@ def grouped_running_sum(
     _check_group_type(df, group_col)
     order = _cols(order_cols)
     if shape == "auto":
-        est = _estimated_bytes(df)
+        est = estimated_bytes(df)
         shape = "window" if est is not None and est <= window_max_bytes else "range"
     if shape == "window":
         return _window_shape(df, group_col, order, value_col, out_col, total_col)

@@ -95,8 +95,8 @@ def merge_upsert(
     refuses a self-referential overwrite otherwise) and bounds the
     in-flight state at O(touched partitions) — the same I/O class as a
     Delta MERGE's file rewrite. For merges whose touched set is too
-    large to pin, fold through the staging-then-rename swap
-    (`compact_index_cells`) instead.
+    large to pin, fold through a staged store commit
+    (`sources/store.py`, as `compact_index_cells` does) instead.
     """
     import os
 

@@ -52,6 +52,12 @@ from udacity_dend_capstone_immigration_spark.operators.curation import (
     chunk_token_rows,
 )
 from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+from udacity_dend_capstone_immigration_spark.sources.store import (
+    begin,
+    commit,
+    pending_batches,
+    recover,
+)
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 from udacity_dend_capstone_immigration_spark.workload.base import table
 from udacity_dend_capstone_immigration_spark.workload.dedupstore import (
@@ -110,6 +116,7 @@ def append_to_chunk_store(
     the single source of truth) and append partitioned rows. No probe
     phase: the relation has no cross-doc aggregate state, so append ≡
     rebuild by construction."""
+    recover(store_dir)
     size, stride, n_buckets = _read_meta(spark, store_dir)
     ch = chunk_documents(new_docs, "doc_id", "text", size=size, stride=stride)
     ch = ch.withColumn("h_pt", _hex_bucket(F.col("chunk_hash"), n_buckets))
@@ -123,7 +130,9 @@ _CHUNK_COLS = ("doc_id", "chunk_idx", "start_tok", "n_tokens", "chunk_hash", "h_
 def read_chunk_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """The full chunk relation: main ∪ pending streamed delta batches
     (both partition-prunable on h_pt; the delta's extra batch_pt key is
-    projected away). With no delta on disk this is a bare main scan."""
+    projected away). With no delta on disk this is a bare main scan.
+    Finishes any pending store commit first."""
+    recover(store_dir)
     main = read_parquet_memo(spark, f"{store_dir}/chunks")
     delta_dir = f"{store_dir}/chunks_delta"
     if not os.path.isdir(delta_dir):
@@ -153,6 +162,7 @@ def stream_append_to_chunk_store(
         _await_or_raise,
     )
 
+    recover(store_dir)
     size, stride, n_buckets = _read_meta(spark, store_dir)
     # batch_id restarts at 0 per checkpoint lineage; namespace the
     # partition value by the checkpoint identity so a second ingestion
@@ -180,22 +190,17 @@ def stream_append_to_chunk_store(
 
 def fold_chunk_store_delta(spark: SparkSession, store_dir: str) -> bool:
     """Minor compaction: fold pending delta batches into the main
-    partitioned relation (one batch append — rows were bucket-assigned
-    at ingest) and drop the delta. Returns whether a delta existed.
-    Crash caveat (shared with the ANN stores' fold_index_delta): the
-    fold APPENDS before it deletes, so a crash between the two leaves
-    rows duplicated across main+delta — production wraps this in the
-    WAP pointer pattern or serves main ∪ delta until a quiet window."""
-    import shutil
-
+    partitioned relation and drop the delta in one store commit (rows
+    were bucket-assigned at ingest, so the staged files move into the
+    live h_pt dirs — O(delta)). Returns whether a delta existed."""
+    recover(store_dir)
     delta_dir = f"{store_dir}/chunks_delta"
     if not os.path.isdir(delta_dir):
         return False
+    stage = begin(store_dir)
     rows = read_parquet_memo(spark, delta_dir).select(*_CHUNK_COLS)
-    write_table(
-        rows, f"{store_dir}/chunks", partition_by=["h_pt"], mode="append"
-    )
-    shutil.rmtree(delta_dir, ignore_errors=True)
+    write_table(rows, f"{stage}/chunks", partition_by=["h_pt"])
+    commit(store_dir, stage, add=["chunks"], drop=["chunks_delta"])
     return True
 
 
@@ -208,6 +213,7 @@ def delete_docs_from_chunk_store(
     anti-join is a plan no-op while no delete has ever landed (the
     `apply_tombstones` discipline); the physical purge is
     :func:`fold_chunk_store_tombstones`, run at maintenance cadence."""
+    recover(store_dir)
     write_table(
         doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id")),
         f"{store_dir}/deleted_docs",
@@ -233,29 +239,19 @@ def fold_chunk_store_tombstones(spark: SparkSession, store_dir: str) -> None:
     chunks scatter — but only across min(its chunk count, n_buckets)
     partitions: the affected h_pt list is computed from the tombstone
     semi-join and COLLECTED (≤ n_buckets values, the eager-decision
-    contract), each affected partition is rewritten minus the dead
-    docs via its own staged overwrite, and a partition the purge
-    EMPTIES is dropped explicitly (dynamic partition overwrite only
-    replaces partitions PRESENT in the written data — the CLAUDE.md
-    resurrection rule). Tombstones retire with the fold."""
-    import shutil
-
+    contract), the affected partitions' survivors are staged in one
+    write, and one store commit replaces each affected partition,
+    drops every partition the purge EMPTIED (dynamic partition
+    overwrite only replaces partitions PRESENT in the written data, so
+    an emptied one would resurrect) and drops the tombstones."""
     if not os.path.isdir(f"{store_dir}/deleted_docs"):
         return
-    # crash ordering (idempotent, marker-free): stage EVERY affected
-    # partition's survivors OUTSIDE chunks/ first, then swap each, then
-    # retire the tombstones LAST — a crash anywhere leaves tombstones
-    # in place, so a re-run re-folds from scratch (stage orphans from
-    # the torn run are cleared here; already-swapped partitions simply
-    # have no dead rows left and drop out of the affected list).
-    # pending streamed delta first: the tombstone purge rewrites MAIN
-    # partitions only, and tombstones retire at the end — a dead doc
-    # still sitting in an unfolded delta would silently resurrect
+    # pending streamed delta first (its own commit): the purge rewrites
+    # MAIN partitions only, and a dead doc still sitting in an unfolded
+    # delta would resurrect once the tombstones are dropped
     fold_chunk_store_delta(spark, store_dir)
-    stage_root = f"{store_dir}/_fold_stage"
-    shutil.rmtree(stage_root, ignore_errors=True)
     dead = read_parquet_memo(spark, f"{store_dir}/deleted_docs").select("doc_id").distinct()
-    ch = read_chunk_store(spark, store_dir)
+    ch = read_parquet_memo(spark, f"{store_dir}/chunks")
     affected = sorted(
         r["h_pt"]
         for r in ch.join(dead, "doc_id", "left_semi")
@@ -263,24 +259,17 @@ def fold_chunk_store_tombstones(spark: SparkSession, store_dir: str) -> None:
         .distinct()
         .collect()
     )
-    swaps = []
-    for pt in affected:
-        part_dir = f"{store_dir}/chunks/h_pt={pt}"
-        survivors = read_parquet_memo(spark, part_dir).join(dead, "doc_id", "left_anti")
-        stage_dir = f"{stage_root}/h_pt={pt}"
-        if survivors.limit(1).count():
-            survivors.write.mode("overwrite").parquet(stage_dir)
-            swaps.append((stage_dir, part_dir))
-        else:
-            # purge EMPTIES the partition: drop the directory outright
-            # (dynamic partition overwrite would resurrect stale files)
-            swaps.append((None, part_dir))
-    for stage_dir, part_dir in swaps:
-        shutil.rmtree(part_dir)
-        if stage_dir is not None:
-            os.rename(stage_dir, part_dir)
-    shutil.rmtree(stage_root, ignore_errors=True)
-    shutil.rmtree(f"{store_dir}/deleted_docs")
+    stage = begin(store_dir)
+    survivors = ch.where(F.col("h_pt").isin(affected)).join(dead, "doc_id", "left_anti")
+    write_table(survivors, f"{stage}/chunks", partition_by=["h_pt"])
+    parts = [f"chunks/h_pt={pt}" for pt in affected]
+    commit(
+        store_dir,
+        stage,
+        replace=[p for p in parts if os.path.isdir(f"{stage}/{p}")],
+        drop=[p for p in parts if not os.path.isdir(f"{stage}/{p}")]
+        + ["deleted_docs"],
+    )
 
 
 #: (sf_dir, corpus fingerprint) -> built store dir; the serve twins
@@ -450,11 +439,8 @@ def documents_stream_chunk_append(spark, sf_dir):
 # rationale as the ANN/dedup policies. Doc tombstones drive `due` like
 # the dedup store's (the fold applies them physically).
 def chunk_maintenance_due(store_dir: str, min_delta_batches: int = 4) -> dict:
-    from udacity_dend_capstone_immigration_spark.workload.vectors import (
-        _pending_batches,
-    )
-
-    n = _pending_batches(f"{store_dir}/chunks_delta")
+    recover(store_dir)
+    n = pending_batches(f"{store_dir}/chunks_delta")
     tomb = os.path.isdir(f"{store_dir}/deleted_docs")
     return {
         "due": n >= min_delta_batches or tomb,

@@ -67,7 +67,6 @@ from __future__ import annotations
 
 from udacity_dend_capstone_immigration_spark.workload.base import read_parquet_memo
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,6 +75,12 @@ from pyspark.sql import functions as F
 from udacity_dend_capstone_immigration_spark.functions.text import doc_fingerprint
 from udacity_dend_capstone_immigration_spark.operators.dedup import shingle_rows
 from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+from udacity_dend_capstone_immigration_spark.sources.store import (
+    begin,
+    commit,
+    pending_batches,
+    recover,
+)
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 from udacity_dend_capstone_immigration_spark.workload.base import query, table
 from udacity_dend_capstone_immigration_spark.workload.textops import (
@@ -328,29 +333,16 @@ def revive_shingles(
     the (doc_id, text) LIVE corpus — one tokenize scan restricted to
     the due shingles, O(corpus) at maintenance cadence like the fold.
 
-    Idempotent under crash re-runs: existing postings for due shingles
-    are physically rewritten away BEFORE the re-indexed rows append,
-    so a re-run lands the identical end state instead of duplicating.
-    Clears the revived shingles from ``dropped_shingles`` (a tombstone
-    would otherwise keep the revived rows dead) and removes
-    ``revival_due``. Returns the number of postings re-indexed."""
+    One store commit: the fold of :func:`fold_dedup_index` with the due
+    shingles' postings replaced by the re-indexed ones and their
+    tombstones lifted, plus ``revival_due`` dropped. Returns the number
+    of postings re-indexed."""
+    recover(index_dir)
     due_dir = f"{index_dir}/revival_due"
     if not os.path.isdir(due_dir):
         return 0
-    k, cap, n_buckets = _read_meta(spark, index_dir)
+    k, _, n_buckets = _read_meta(spark, index_dir)
     due = read_parquet_memo(spark, due_dir).select("g").distinct().localCheckpoint()
-    # 1. drop any existing (tombstoned/stale) postings for due shingles
-    idx_cols = ["g", "cid", "g_pt"]
-    idx = _union_delta(spark, index_dir, "shingle_index", idx_cols)
-    _swap_in(
-        idx.join(due, "g", "left_anti"),
-        f"{index_dir}/shingle_index",
-        partition_by=["g_pt"],
-    )
-    droot = f"{index_dir}/shingle_index_delta"
-    if _has_batches(droot):
-        shutil.rmtree(droot)
-    # 2. re-index the due shingles from the live corpus
     e = shingle_rows(corpus_docs, "doc_id", "text", k).withColumnRenamed(
         "shingle", "g"
     )
@@ -365,28 +357,8 @@ def revive_shingles(
         .withColumn("g_pt", _bucket(F.col("g"), n_buckets))
         .localCheckpoint(eager=True)
     )
-    n = revived.count()
-    write_table(
-        revived, f"{index_dir}/shingle_index", partition_by=["g_pt"], mode="append"
-    )
-    # 3. revived shingles are live again — clear their tombstones
-    dead_dir = f"{index_dir}/dropped_shingles"
-    if os.path.isdir(dead_dir):
-        kept = read_parquet_memo(spark, dead_dir).select("g").join(due, "g", "left_anti")
-        if kept.limit(1).count():
-            _swap_in(kept, dead_dir)
-        else:
-            shutil.rmtree(dead_dir)
-    ddelta = f"{index_dir}/dropped_shingles_delta"
-    if _has_batches(ddelta):
-        kept_d = (
-            read_parquet_memo(spark, ddelta).select("g").join(due, "g", "left_anti")
-        )
-        if kept_d.limit(1).count():
-            write_table(kept_d, f"{index_dir}/dropped_shingles", mode="append")
-        shutil.rmtree(ddelta)
-    shutil.rmtree(due_dir)
-    return int(n)
+    _fold_commit(spark, index_dir, due=due, revived=revived)
+    return int(revived.count())
 
 
 def stream_append_to_dedup_index(
@@ -471,12 +443,6 @@ def stream_append_to_dedup_index(
     _await_or_raise(q, timeout_sec, f"dedup_index_append:{index_dir}")
 
 
-def _has_batches(delta_root: str) -> bool:
-    return os.path.isdir(delta_root) and any(
-        e.startswith("batch_pt=") for e in os.listdir(delta_root)
-    )
-
-
 def _union_delta(
     spark: SparkSession,
     index_dir: str,
@@ -488,10 +454,12 @@ def _union_delta(
     main∪delta serving contract). ``exclude_batch`` drops one
     ``batch_pt`` from the delta side — the stream writer's own-batch
     exclusion: on a crash replay, the re-executing micro-batch must not
-    probe the partial rows its first attempt landed."""
+    probe the partial rows its first attempt landed. Finishes any
+    pending store commit first."""
+    recover(index_dir)
     main = read_parquet_memo(spark, f"{index_dir}/{rel}").select(*cols)
     droot = f"{index_dir}/{rel}_delta"
-    if not _has_batches(droot):
+    if not pending_batches(droot):
         return main
     d = read_parquet_memo(spark, droot)
     if exclude_batch is not None:
@@ -507,7 +475,7 @@ def _dead_shingles(spark: SparkSession, index_dir: str):
         parts.append(
             read_parquet_memo(spark, f"{index_dir}/dropped_shingles").select("g")
         )
-    if _has_batches(f"{index_dir}/dropped_shingles_delta"):
+    if pending_batches(f"{index_dir}/dropped_shingles_delta"):
         parts.append(
             read_parquet_memo(spark, f"{index_dir}/dropped_shingles_delta").select("g")
         )
@@ -576,88 +544,58 @@ def read_dedup_doc_sizes(spark: SparkSession, index_dir: str) -> DataFrame:
     return sz
 
 
-def _swap_in(df: DataFrame, path: str, partition_by=None) -> None:
-    """Write ``df`` (which may READ from ``path``) to a staging dir,
-    then swap: the write fully materializes before the source moves, so
-    a crash leaves either the old relation valid or (for the instant
-    between renames) a recoverable ``__old`` copy beside the store."""
-    staging = f"{path}__staging"
-    old = f"{path}__old"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    write_table(df, staging, partition_by=partition_by)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-
-
 def fold_dedup_index(spark: SparkSession, index_dir: str) -> None:
-    """Maintenance fold: absorb any streamed delta batches into the
-    main relations, apply tombstones physically to the postings,
-    collapse per-append stats rows to one (g, df), dedupe the
-    fingerprint set, and clear every tombstone/delta dir — after which
-    reads are bare scans again. O(store) at maintenance cadence,
-    exactly like `fold_index_delta` / `compact_index_cells` for the
-    ANN stores (same append-before-delete crash caveat as
-    `fold_index_delta`)."""
-    _, _, n_buckets = _read_meta(spark, index_dir)
-    for rel, cols, pby in (
-        ("shingle_index", ["g", "cid", "g_pt"], ["g_pt"]),
-        ("shingle_df", ["g", "df", "g_pt"], ["g_pt"]),
-        ("fingerprints", ["fp", "cid", "fp_pt"], ["fp_pt"]),
-        ("doc_sizes", ["doc_id", "n"], None),
-    ):
-        droot = f"{index_dir}/{rel}_delta"
-        if _has_batches(droot):
-            write_table(
-                read_parquet_memo(spark, droot).select(*cols),
-                f"{index_dir}/{rel}",
-                partition_by=pby,
-                mode="append",
-            )
-            shutil.rmtree(droot)
-    ddelta = f"{index_dir}/dropped_shingles_delta"
-    if _has_batches(ddelta):
-        write_table(
-            read_parquet_memo(spark, ddelta).select("g"),
-            f"{index_dir}/dropped_shingles",
-            mode="append",
-        )
-        shutil.rmtree(ddelta)
+    """Maintenance fold: rewrite every relation from main ∪ streamed
+    delta with the tombstones applied physically — postings minus dead
+    shingles and deleted docs, per-append stats rows collapsed to one
+    (g, df), a deduped fingerprint set — and drop every delta and
+    tombstone dir, all in one store commit; reads are bare scans again
+    afterwards. O(store) at maintenance cadence, exactly like
+    `compact_index_cells` for the ANN stores."""
+    _fold_commit(spark, index_dir)
+
+
+def _fold_commit(spark, index_dir: str, due=None, revived=None) -> None:
+    """The fold as one store commit. With ``due`` (g) and ``revived``
+    (g, cid, g_pt) it is also the revival: postings and tombstones of
+    the due shingles are replaced by the re-indexed rows."""
     idx = read_dedup_shingle_index(spark, index_dir, with_bucket=True)
-    _swap_in(idx, f"{index_dir}/shingle_index", partition_by=["g_pt"])
+    if due is not None:
+        idx = idx.join(due, "g", "left_anti").unionByName(revived)
     # negative delete-retraction rows sum away here; a shingle whose
     # live df reached 0 drops its stats row entirely (rebuild parity)
     stats = (
-        read_parquet_memo(spark, f"{index_dir}/shingle_df")
+        _union_delta(spark, index_dir, "shingle_df", ["g", "df", "g_pt"])
         .groupBy("g", "g_pt")
         .agg(F.sum("df").cast("long").alias("df"))
         .where(F.col("df") != 0)
         .select("g", "df", "g_pt")
     )
-    _swap_in(stats, f"{index_dir}/shingle_df", partition_by=["g_pt"])
+    fp = _union_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
+    sizes = _union_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
     gone = _dead_docs(spark, index_dir)
-    fp = read_parquet_memo(spark, f"{index_dir}/fingerprints").select(
-        "fp", "cid", "fp_pt"
-    )
     if gone is not None:
         fp = fp.join(gone, "cid", "left_anti")
-    _swap_in(fp.distinct(), f"{index_dir}/fingerprints", partition_by=["fp_pt"])
-    if gone is not None:
-        sizes = read_parquet_memo(spark, f"{index_dir}/doc_sizes").select("doc_id", "n")
         sizes = sizes.join(
             gone.select(F.col("cid").alias("doc_id")), "doc_id", "left_anti"
         )
-        _swap_in(sizes, f"{index_dir}/doc_sizes")
-    dead_dir = f"{index_dir}/dropped_shingles"
-    if os.path.isdir(dead_dir):
-        shutil.rmtree(dead_dir)
-    # doc tombstones are applied physically above; pending revival_due
-    # (if any) still needs revive_shingles + the live corpus — fold
-    # cannot resolve it (no texts in the store)
-    gone_dir = f"{index_dir}/deleted_docs"
-    if os.path.isdir(gone_dir):
-        shutil.rmtree(gone_dir)
+    stage = begin(index_dir)
+    write_table(idx, f"{stage}/shingle_index", partition_by=["g_pt"])
+    write_table(stats, f"{stage}/shingle_df", partition_by=["g_pt"])
+    write_table(fp.distinct(), f"{stage}/fingerprints", partition_by=["fp_pt"])
+    write_table(sizes, f"{stage}/doc_sizes")
+    drop = [f"{rel}_delta" for rel in DEDUP_DELTA_RELS]
+    drop += ["dropped_shingles", "dropped_shingles_delta", "deleted_docs"]
+    # pending revival_due survives a plain fold: clearing it needs the
+    # live corpus (revive_shingles), and the store holds no texts
+    if due is not None:
+        drop.append("revival_due")
+    commit(
+        index_dir,
+        stage,
+        replace=["shingle_index", "shingle_df", "fingerprints", "doc_sizes"],
+        drop=drop,
+    )
 
 
 # --- served-store cache (same contract as vectors.served_index_dir):
@@ -877,15 +815,6 @@ def documents_stream_index_append(spark, sf_dir):
     return _index_aggregate(spark, out)
 
 
-#: Join-strategy hint for the batch-classify shingle joins
-#: ("merge" | "shuffle_hash") — the hint exists because the batch side
-#: is explode-inflated (estimate-blind: a static broadcast of an
-#: SF-scaling relation must be impossible); WHICH shuffled strategy is
-#: an A/B decision (tools/ab_classify_join.py — r16 only measured
-#: shuffle_hash bundled with the reverted grouped-array carry).
-_CLASSIFY_JOIN_HINT = "merge"
-
-
 def classify_batch_against_index(
     spark: SparkSession, index_dir: str, batch: DataFrame
 ) -> DataFrame:
@@ -921,7 +850,7 @@ def classify_batch_against_index(
     )
     inter = (
         ne.select(F.col("doc_id").alias("nid"), "g")
-        .hint(_CLASSIFY_JOIN_HINT)
+        .hint("merge")
         .join(cke, "g")
         .groupBy("nid", "cid")
         .agg(F.count(F.lit(1)).alias("i"))
@@ -936,7 +865,7 @@ def classify_batch_against_index(
     )
     jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
     near = (
-        inter.join(za.hint(_CLASSIFY_JOIN_HINT), "nid")
+        inter.join(za.hint("merge"), "nid")
         .join(zb, "cid")
         .where(jac >= 0.5)
         .select(F.col("nid").alias("doc_id"))
@@ -1114,24 +1043,23 @@ def dedup_maintenance_due(index_dir: str, min_delta_batches: int = 4) -> dict:
     BATCHES per relation, same calibration rationale as
     `vectors.maintenance_due` (a file-count ratio fires after one
     bucketed batch — the delta the trigger should leave in place)."""
-    from udacity_dend_capstone_immigration_spark.workload.vectors import _pending_batches
-
+    recover(index_dir)
     pending = {}
     crossing = []
     for rel in DEDUP_DELTA_RELS:
-        n = _pending_batches(f"{index_dir}/{rel}_delta")
+        n = pending_batches(f"{index_dir}/{rel}_delta")
         if n == 0:
             continue
         pending[rel] = n
         if n >= min_delta_batches:
             crossing.append(rel)
-    tomb = os.path.isdir(f"{index_dir}/dropped_shingles") or _has_batches(
+    tomb = os.path.isdir(f"{index_dir}/dropped_shingles") or pending_batches(
         f"{index_dir}/dropped_shingles_delta"
     )
     # doc tombstones (right-to-be-forgotten deletes): the fold applies
     # them physically, so they count toward due exactly like shingle
     # tombstones (r14 — the policy previously missed them)
-    doc_tomb = os.path.isdir(f"{index_dir}/deleted_docs") or _has_batches(
+    doc_tomb = os.path.isdir(f"{index_dir}/deleted_docs") or pending_batches(
         f"{index_dir}/deleted_docs_delta"
     )
     # reverse cap-crossings awaiting re-index: REPORT-ONLY — clearing

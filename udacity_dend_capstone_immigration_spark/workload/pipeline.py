@@ -35,25 +35,6 @@ from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.workload.base import ORACLES, query, table
 
-#: Submit the classify and DSIR-score checkpoints from a 2-thread pool
-#: (guide §2.6) vs sequentially. r17 A/B (tools/ab_pipeline_overlap.py:
-#: interleaved arms in one session, min-of-N, quiet box): at sf0.1 the
-#: overlap wins narrowly (4.17 vs 4.73s), but at the x100 corpus
-#: SEQUENTIAL wins every rep (13.70 vs 17.31s min-of-3; same verdict
-#: as the r16 x100 reading, 14.7 vs 16.3, and the driver's 0.68×
-#: regression) — once both jobs have enough data to saturate the
-#: executors, concurrent submission only adds contention; FIFO
-#: back-fill pays ONLY when one job leaves cores idle in its tail.
-#: Shipped: sequential (the 100 TB posture; VERDICT r16 item 1 — "it
-#: doesn't win both"). The flag stays so the A/B is one toggle to
-#: re-run.
-_OVERLAP_JOBS = False
-
-#: Force the served pipeline's estimate-gated one-job fold on/off
-#: (None = gate decides; tools/ab_select_fold.py toggles it so the A/B
-#: is one flag).
-_FOLD_SELECT_OVERRIDE: bool | None = None
-
 # ---------------------------------------------------------------------------
 # Oracle assembly: splice the three component oracles' CTE chains.
 
@@ -142,8 +123,6 @@ def corpus_pipeline_served(spark, sf_dir):
         served_dsir_dir,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = table(spark, sf_dir, "documents")
     batch = docs.where(F.col("doc_id") % _INC_MOD == 0)
 
@@ -161,11 +140,9 @@ def corpus_pipeline_served(spark, sf_dir):
     # filter as a semi-join on the slim aggregated score rows, where
     # filter-then-score ≡ score-then-filter bit-for-bit (A/B at sf0.1:
     # stage 1.8 → ~0.9s). That same commutation makes classify and
-    # score INDEPENDENT jobs; whether they are submitted sequentially
-    # or from a 2-thread pool is _OVERLAP_JOBS (module header: the r17
-    # A/B shipped SEQUENTIAL — overlap loses at the x100 corpus and in
-    # the driver's 32-core protocol). Each materializes O(batch) slim
-    # rows.
+    # score INDEPENDENT jobs, submitted one after the other (r17 A/B in
+    # OPTIMIZATION_r17.md: a 2-thread pool loses at the x100 corpus and
+    # at 32 cores). Each materializes O(batch) slim rows.
     d = served_dsir_dir(spark, sf_dir)
     scored_c = read_parquet_memo(spark, f"{d}/pkn_corpus").select("bigram", "p_kn")
     scored_t = read_parquet_memo(spark, f"{d}/pkn_target").select("bigram", "p_kn")
@@ -188,14 +165,11 @@ def corpus_pipeline_served(spark, sf_dir):
     # LogicalRDD-pinned at Long.MaxValue (over).
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
         WINDOW_MAX_BYTES,
-        _estimated_bytes,
+        estimated_bytes,
     )
 
-    est = _estimated_bytes(batch.select("doc_id", "source"))
-    fold = est is not None and est <= WINDOW_MAX_BYTES
-    if _FOLD_SELECT_OVERRIDE is not None:
-        fold = _FOLD_SELECT_OVERRIDE
-    if fold:
+    est = estimated_bytes(batch.select("doc_id", "source"))
+    if est is not None and est <= WINDOW_MAX_BYTES:
         spark.sparkContext.setJobDescription(
             "pipeline: classify+score+select (folded)"
         )
@@ -208,23 +182,10 @@ def corpus_pipeline_served(spark, sf_dir):
             .localCheckpoint()
         )
     else:
-
-        def _materialize_surv():
-            spark.sparkContext.setJobDescription("pipeline: classify vs dedup store")
-            return surv_lazy.localCheckpoint()
-
-        def _materialize_scores():
-            spark.sparkContext.setJobDescription("pipeline: DSIR score batch")
-            return scored_lazy.localCheckpoint()
-
-        if _OVERLAP_JOBS:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                surv_f = pool.submit(_materialize_surv)
-                scored_f = pool.submit(_materialize_scores)
-                surv_ids, scored_all = surv_f.result(), scored_f.result()
-        else:
-            surv_ids, scored_all = _materialize_surv(), _materialize_scores()
-
+        spark.sparkContext.setJobDescription("pipeline: classify vs dedup store")
+        surv_ids = surv_lazy.localCheckpoint()
+        spark.sparkContext.setJobDescription("pipeline: DSIR score batch")
+        scored_all = scored_lazy.localCheckpoint()
         scored_surv = scored_all.join(surv_ids.hint("merge"), "doc_id", "leftsemi")
         sel_ids = (
             _dsir_select_from_scores(scored_surv, shape="range")

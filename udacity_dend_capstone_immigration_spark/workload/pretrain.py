@@ -301,11 +301,11 @@ def _vocab_partitions(docs) -> int:
     training round re-scans the checkpoint through a Python kernel, so
     empty partitions cost a worker round-trip each, per round."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
-        _estimated_bytes,
+        estimated_bytes,
     )
 
     par = docs.sparkSession.sparkContext.defaultParallelism
-    est = _estimated_bytes(docs)
+    est = estimated_bytes(docs)
     if est is None or est >= (32 << 20) * par:
         return par
     return max(1, est // (32 << 20) + 1)
@@ -507,11 +507,11 @@ def _bpe_train(spark, docs):
     vocab-keyed exchanges + 3 sorts per round through the window
     pipeline)."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
-        _estimated_bytes,
+        estimated_bytes,
     )
     from udacity_dend_capstone_immigration_spark.operators.spread import spread_scan
 
-    est = _estimated_bytes(docs)
+    est = estimated_bytes(docs)
     if est is not None and est <= _BPE_DRIVER_CORPUS_BYTES:
         vocab = (
             spread_scan(docs)

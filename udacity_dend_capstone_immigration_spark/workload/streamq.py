@@ -46,13 +46,13 @@ def _state_partitions_for(spark, *static_rels):
     pure overhead at small backlogs; the configured session value
     stays the ceiling for production backlogs)."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
-        _estimated_bytes,
+        estimated_bytes,
     )
     from udacity_dend_capstone_immigration_spark.streaming.windows import (
         stream_state_partitions,
     )
 
-    ests = [_estimated_bytes(r) for r in static_rels]
+    ests = [estimated_bytes(r) for r in static_rels]
     known = [e for e in ests if e is not None]
     return stream_state_partitions(spark, sum(known) if known else None)
 
@@ -611,7 +611,7 @@ def documents_stream_dedup_status(spark, sf_dir):
     # create/commit round-trip per micro-batch, ~3× the real drain
     # work at test scale.
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
-        _estimated_bytes,
+        estimated_bytes,
     )
     from udacity_dend_capstone_immigration_spark.streaming.windows import (
         stream_state_partitions,
@@ -620,7 +620,7 @@ def documents_stream_dedup_status(spark, sf_dir):
     # size on everything the drains touch: the arriving batch AND the
     # store's shingle index (the stream-static join re-shuffles both
     # sides to the state partition count)
-    _ests = [_estimated_bytes(docs.where(is_new)), _estimated_bytes(cke)]
+    _ests = [estimated_bytes(docs.where(is_new)), estimated_bytes(cke)]
     sp = stream_state_partitions(
         spark, sum(e for e in _ests if e is not None) if any(_ests) else None
     )
@@ -1782,8 +1782,8 @@ def _register_stream_scd2():
         # apply_cdc's absolute-image rewrites), so each applied batch
         # leaves a marker; a replayed batch_id is skipped. The marker
         # is written AFTER the apply: a crash inside that window
-        # re-applies (the documented fold_index_delta caveat class —
-        # full exactly-once needs the WAP pointer pattern).
+        # re-applies (full exactly-once needs the apply and its marker
+        # in one commit).
         applied = tempfile.mkdtemp(prefix="scd2_applied_")
 
         def land(batch_df, batch_id):

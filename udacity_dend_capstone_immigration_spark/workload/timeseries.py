@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+from udacity_dend_capstone_immigration_spark.sources.store import begin, commit, recover
 from udacity_dend_capstone_immigration_spark.workload.base import ORACLES, query, table
 
 #: 1 hour in microseconds — Spark's rangeBetween needs a numeric order
@@ -781,6 +782,7 @@ def append_feature_dayagg(spark, store: str, dayagg, day: str) -> None:
     replays (batch-id markers), like the SCD2 stream."""
     from udacity_dend_capstone_immigration_spark.sources.writers import write_parquet
 
+    recover(store)
     latest = spark.read.parquet(f"{store}/latest").select(
         "user_id",
         F.col("clicks_cum").alias("p_clicks"),
@@ -855,37 +857,18 @@ def prune_feature_snapshots(spark, store: str, keep_days: int) -> list:
     them (loud, never silently-zero). ``latest`` is untouched — it
     carries full cumulative state, so appends are unaffected.
 
-    Crash ordering (r14 review fix): fold-write the floor partition,
-    ADVANCE THE MARKER, then drop older directories. A crash between
-    marker and drops leaves the marker plus extra history —
-    conservative-correct (pre-floor probes raise even though the
-    history could still answer them); the original marker-last order
-    had a window where history was gone but the floor was unrecorded,
-    and a re-run (seeing <= keep_days partitions) would never write
-    it, silently disabling the loud-floor contract.
-
-    Floor swap (r15 advice fix): the fold never overwrites the floor
-    partition in place (plain overwrite DELETES the target before the
-    job commits — a crash mid-write would destroy the floor day's
-    original rows, and the idempotent re-run would then fold each
-    floor-day-active user's SECOND-newest state into the floor,
-    silently breaking the within-window bit-exact PIT contract).
-    Instead the folded frame lands in a '_'-prefixed staging sibling
-    (invisible to Spark's partition discovery) and swaps in by rename;
-    :func:`_recover_snapshot_fold` repairs any torn swap — rollback,
-    since the pre-floor history the fold reads is still intact until
-    the drops below. Re-running is idempotent either way (the fold of
-    a folded floor ∪ remaining history is itself). Returns the
-    dropped partition values."""
+    One store commit replaces the floor partition with the fold,
+    drops the older partitions and replaces ``retention``, so no crash
+    can leave history gone without the floor recorded, or the floor
+    half-folded. Returns the dropped partition values."""
     import os
-    import shutil
 
     from pyspark.sql import Window as W
 
     from udacity_dend_capstone_immigration_spark.sources.writers import write_parquet
 
     snap_dir = f"{store}/snapshots"
-    _recover_snapshot_fold(snap_dir)
+    recover(store)
     days = sorted(
         e.split("=", 1)[1]
         for e in os.listdir(snap_dir)
@@ -903,58 +886,24 @@ def prune_feature_snapshots(spark, store: str, keep_days: int) -> list:
         back.withColumn("rn", F.row_number().over(wl))
         .where(F.col("rn") == 1)
         .select("user_id", "clicks_cum", "views_cum", "vsum_cum")
-        # cut lineage: the fold reads the partition it replaces
-        .localCheckpoint()
     )
     esc = (
         spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .escapePathName
     )
-    # staging-then-rename (the compact_index_cells pattern): the live
-    # floor partition stays intact until the staged fold is complete
-    staging = os.path.join(snap_dir, f"_feature_date={esc(floor)}.staging")
-    write_parquet(folded, staging)
-    live = os.path.join(snap_dir, f"feature_date={esc(floor)}")
-    retired = os.path.join(snap_dir, f"_feature_date={esc(floor)}.old")
-    os.rename(live, retired)
-    os.rename(staging, live)
-    shutil.rmtree(retired, ignore_errors=True)
-    # marker BEFORE the drops: a crash here is conservative (marker +
-    # extra history), never a silent hole (history gone, no marker)
+    stage = begin(store)
+    floor_part = f"snapshots/feature_date={esc(floor)}"
+    write_parquet(folded, f"{stage}/{floor_part}")
     write_parquet(
-        local_frame(spark, [(floor,)], "floor string"), f"{store}/retention"
+        local_frame(spark, [(floor,)], "floor string"), f"{stage}/retention"
     )
-    for d in old:
-        p = os.path.join(snap_dir, f"feature_date={esc(d)}")
-        if os.path.isdir(p):
-            shutil.rmtree(p)
+    commit(
+        store,
+        stage,
+        replace=[floor_part, "retention"],
+        drop=[f"snapshots/feature_date={esc(d)}" for d in old],
+    )
     return old
-
-
-def _recover_snapshot_fold(snap_dir: str) -> None:
-    """Repair a fold swap torn by a crash. A retired floor partition
-    parked at ``_feature_date=<d>.old`` is restored when its live
-    counterpart is missing (rollback — the pre-floor history the fold
-    needs still exists at that point, so the next prune simply
-    re-folds) and dropped when the swap completed; orphan ``.staging``
-    dirs are swept (pre-commit writes, re-runnable). '_'-prefixed
-    names are invisible to Spark's partition discovery, so torn state
-    never changes what a concurrent read serves."""
-    import os
-    import shutil
-
-    if not os.path.isdir(snap_dir):
-        return
-    for e in os.listdir(snap_dir):
-        p = os.path.join(snap_dir, e)
-        if e.startswith("_feature_date=") and e.endswith(".old"):
-            live = os.path.join(snap_dir, e[1:][: -len(".old")])
-            if not os.path.isdir(live):
-                os.rename(p, live)
-            else:
-                shutil.rmtree(p, ignore_errors=True)
-        elif e.startswith("_feature_date=") and e.endswith(".staging"):
-            shutil.rmtree(p, ignore_errors=True)
 
 
 def read_feature_snapshots(spark, store: str, min_asof_day=None):
@@ -965,9 +914,8 @@ def read_feature_snapshots(spark, store: str, min_asof_day=None):
     partition), one before it would need the pruned history and would
     otherwise silently read as first-day zeros. Pass ``min_asof_day``
     (ISO string or date) from the label frame's bounded min; omit it
-    for maintenance scans. Also completes/rolls back any fold swap a
-    crashed prune left torn (one listdir in the common case)."""
-    _recover_snapshot_fold(f"{store}/snapshots")
+    for maintenance scans. Finishes any pending store commit first."""
+    recover(store)
     if min_asof_day is not None:
         floor = feature_retention_floor(spark, store)
         if floor is not None and str(min_asof_day) < floor:
@@ -1117,8 +1065,8 @@ _FS_KEEP_DAYS = 5
 # user's newest state at-or-before the floor — so the hash proves the
 # fold carried exactly the right rows into exactly the right partition
 # (a fold row landing on any other day, or a second-newest state
-# chosen, fails the hash; the latter is precisely the corruption the
-# r15 staging-rename crash fix prevents).
+# chosen, fails the hash; the latter is precisely the corruption a
+# torn floor rewrite would leave, which the store commit rules out).
 @query(
     "feature_store_prune_roundtrip",
     oracle=f"""

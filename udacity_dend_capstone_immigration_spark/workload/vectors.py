@@ -18,6 +18,12 @@ from udacity_dend_capstone_immigration_spark.operators.similarity import (
     signbit_lsh_knn,
 )
 from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+from udacity_dend_capstone_immigration_spark.sources.store import (
+    begin,
+    commit,
+    pending_batches,
+    recover,
+)
 from udacity_dend_capstone_immigration_spark.workload.base import (
     ORACLES,
     davg,
@@ -1186,6 +1192,7 @@ def _encode_against_index(spark, new_emb, index_dir: str):
         pq_encode,
     )
 
+    recover(index_dir)
     cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
     cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
     books = load_pq_codebooks(spark, f"{index_dir}/pq_codebooks")
@@ -1256,6 +1263,7 @@ def append_to_ivf_flat_index(spark, new_emb, index_dir: str) -> None:
     )
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
+    recover(index_dir)
     cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
     cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
     assigned = assign_nearest_arrow(new_emb, cb, "vec_id", keep_embedding=True)
@@ -1363,6 +1371,7 @@ def append_to_sq8_index(spark, new_emb, index_dir: str) -> None:
     )
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
+    recover(index_dir)
     cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
     cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
     mn, mx = load_sq8_stats(spark, f"{index_dir}/sq8_stats")
@@ -1404,6 +1413,7 @@ def stream_append_to_ivf_flat_index(
 
     import hashlib
 
+    recover(index_dir)
     cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
     cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
     # batch_id restarts at 0 for every NEW checkpoint lineage, so batch
@@ -1454,6 +1464,7 @@ def stream_append_to_sq8_index(
         _await_or_raise,
     )
 
+    recover(index_dir)
     cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
     cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
     mn, mx = load_sq8_stats(spark, f"{index_dir}/sq8_stats")
@@ -1482,11 +1493,11 @@ def stream_append_to_sq8_index(
 def read_sq8_store(spark, index_dir: str):
     """Serving view of the SQ8 store: main ∪ delta, both
     cell_pt-prunable (the `read_ivf_flat_store` contract for byte
-    codes; tombstones layered by the caller). Completes any
-    committed-but-torn reindex first (one isfile check)."""
+    codes; tombstones layered by the caller). Finishes any pending
+    store commit first."""
     import os
 
-    _finish_retrain_commit(index_dir)
+    recover(index_dir)
     cols = ["vec_id", "codes", "cell", "cell_pt"]
     main = read_parquet_memo(spark, f"{index_dir}/sq8_codes").select(*cols)
     delta_dir = f"{index_dir}/sq8_codes_delta"
@@ -1505,31 +1516,31 @@ _STORE_COLS = {
 
 def fold_store_delta(spark, index_dir: str, store: str) -> bool:
     """Generic minor compaction: fold ``{store}_delta`` into the main
-    cell-partitioned ``store`` (one batch append — rows were already
-    cell-assigned at ingest) and drop the delta dir. Returns whether a
-    delta existed. Crash caveat as documented on `fold_index_delta`."""
+    cell-partitioned ``store`` and drop the delta in one store commit.
+    The rows were cell-assigned at ingest, so the staged files move into
+    the live cell dirs (O(delta)). Returns whether a delta existed."""
     import os
-    import shutil as sh
 
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
+    recover(index_dir)
     delta_dir = f"{index_dir}/{store}_delta"
     if not os.path.isdir(delta_dir):
         return False
+    stage = begin(index_dir)
     rows = read_parquet_memo(spark, delta_dir).select(*_STORE_COLS[store])
     write_table(
         rows.withColumn("cell_pt", F.col("cell")),
-        f"{index_dir}/{store}",
+        f"{stage}/{store}",
         partition_by=["cell_pt"],
-        mode="append",
     )
-    sh.rmtree(delta_dir, ignore_errors=True)
+    commit(index_dir, stage, add=[store], drop=[f"{store}_delta"])
     return True
 
 
 def fold_sq8_delta(spark, index_dir: str) -> None:
     """Fold streamed SQ8 delta batches into the main codes store and
-    drop the delta (same crash caveat as :func:`fold_index_delta`)."""
+    drop the delta."""
     fold_store_delta(spark, index_dir, "sq8_codes")
 
 
@@ -1542,12 +1553,8 @@ def _parquet_file_count(d: str) -> int:
     return n
 
 
-def _pending_batches(delta_dir: str) -> int:
-    import os
-
-    if not os.path.isdir(delta_dir):
-        return 0
-    return sum(1 for e in os.listdir(delta_dir) if e.startswith("batch_pt="))
+#: the benchmark harness imports the pending-batch count under this name
+_pending_batches = pending_batches
 
 
 def maintenance_due(
@@ -1590,10 +1597,11 @@ def maintenance_due(
     explicit reindex window."""
     import os
 
+    recover(index_dir)
     fold = []
     pending = {}
     for store in _INDEX_STORES:
-        n = _pending_batches(f"{index_dir}/{store}_delta")
+        n = pending_batches(f"{index_dir}/{store}_delta")
         if n == 0:
             continue
         pending[store] = n
@@ -1630,87 +1638,30 @@ def run_due_maintenance(spark, index_dir: str, **thresholds) -> list:
     return done
 
 
-#: commit marker for the two-relation retrain swap: written (atomic
-#: os.replace) only AFTER both staged relations are fully on disk, so
-#: its presence is the commit point — recovery rolls FORWARD; an orphan
-#: stage with no marker is pre-commit and rolls back (swept).
-_RETRAIN_MARKER = "_retrain_commit.json"
-
-
-def _finish_retrain_commit(index_dir: str) -> bool:
-    """Idempotent roll-forward of a committed retrain generation: swap
-    each staged relation over the live one, retire the streamed delta
-    and the tombstones IN THE SAME GENERATION (the rewrite already
-    folded/dropped their rows — serving main ∪ delta past this point
-    would double-count), then drop the stage and the marker. Every step
-    is existence-guarded, so a crash at ANY point is repaired by the
-    next call — the r14 advice's torn-swap windows (new codebook over
-    old assignments; retired delta still union'd into serves) cannot
-    outlive one recovery pass. No-op (False) when no marker exists."""
-    import json
-    import os
-    import shutil as sh
-
-    marker = f"{index_dir}/{_RETRAIN_MARKER}"
-    if not os.path.isfile(marker):
-        return False
-    with open(marker) as fh:
-        meta = json.load(fh)
-    stage = os.path.join(index_dir, meta["stage"])
-    # relation set travels IN the marker (r15: the SQ8 reindex swaps a
-    # different generation — centroids + stats + codes); flat-retrain
-    # markers predate the field, so default to the flat pair
-    rels = meta.get("relations", ["ivf_centroids", "ivf_vectors"])
-    retire = meta.get("retire", ["ivf_vectors_delta", "deleted_ids"])
-    for rel in rels:
-        staged = f"{stage}/{rel}"
-        live = f"{index_dir}/{rel}"
-        retired = f"{live}.retired"
-        if os.path.isdir(staged):
-            if os.path.isdir(live):
-                os.rename(live, retired)
-            os.rename(staged, live)
-        sh.rmtree(retired, ignore_errors=True)
-    for d in retire:
-        sh.rmtree(f"{index_dir}/{d}", ignore_errors=True)
-    sh.rmtree(stage, ignore_errors=True)
-    os.remove(marker)
-    return True
-
-
 def retrain_ivf_flat_index(spark, index_dir: str) -> dict:
     """The maintenance ACTION the drift trigger schedules (r14 staging
     — completes trigger → action: `maintenance_due(spark=...)` says
     retraining is due, this runs it). Lloyd-train fresh centroids on
     the store's CURRENT content (served view: main ∪ pending delta,
     tombstones applied — exactly what the drift report measured),
-    re-assign every vector, and swap BOTH relations plus the
-    delta/tombstone retirement as ONE generation: both staged relations
-    land under a single ``_retrain_stage_`` parent, an atomic commit
-    marker is written only after both writes finish, and
-    `_finish_retrain_commit` rolls the swap forward idempotently (the
-    WAP commit-point pattern of `sources/publish.py`, fixing the r14
-    advice's torn two-rename window — a crash can no longer leave a new
-    codebook over old cell assignments or a folded delta still being
-    served). Pre-commit crashes leave an unmarked stage that
-    `compact_index_cells`' sweeper discards. The retrain REWRITES the
-    whole flat store, so the delta and tombstones are retired inside
-    the same commit. FLAT layout only: a PQ/SQ8 retrain invalidates
-    every persisted code row by definition — run those through their
-    builders in a reindex window. Returns {n_vectors, n_cells}.
+    re-assign every vector, and swap BOTH relations as one store
+    commit that also drops the delta and the tombstones (the rewrite
+    already folded/dropped their rows — serving main ∪ delta past it
+    would double-count). A crash can never leave a new codebook over
+    old cell assignments or a folded delta still being served. FLAT
+    layout only: a PQ/SQ8 retrain invalidates every persisted code row
+    by definition — run those through their builders in a reindex
+    window. Returns {n_vectors, n_cells}.
 
     Quality contract (unit-pinned): post-retrain the drift report
     reads at a fresh Lloyd fixed point — the appended mass that fired
     the trigger is now IN the codebook."""
-    import tempfile
-
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         assign_nearest_arrow,
     )
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
-    _finish_retrain_commit(index_dir)
-    # eager checkpoint: the rewrite below replaces the directories this
+    # eager checkpoint: the commit below replaces the directories this
     # read depends on
     cur = (
         apply_tombstones(spark, index_dir, read_ivf_flat_store(spark, index_dir))
@@ -1719,43 +1670,20 @@ def retrain_ivf_flat_index(spark, index_dir: str) -> dict:
     )
     cents, cb = _ivf_train(cur)
     assigned = assign_nearest_arrow(cur, cb, "vec_id", keep_embedding=True)
-    stage = tempfile.mkdtemp(prefix="_retrain_stage_", dir=index_dir)
-    write_table(cents, f"{stage}/ivf_centroids", mode="overwrite")
+    stage = begin(index_dir)
+    write_table(cents, f"{stage}/ivf_centroids")
     write_table(
         assigned.withColumn("cell_pt", F.col("cell")),
         f"{stage}/ivf_vectors",
         partition_by=["cell_pt"],
-        mode="overwrite",
     )
-    # commit point: marker lands atomically only after both relations
-    # are fully staged; from here recovery always rolls forward
-    _write_retrain_marker(
+    commit(
         index_dir,
         stage,
-        relations=["ivf_centroids", "ivf_vectors"],
-        retire=["ivf_vectors_delta", "deleted_ids"],
+        replace=["ivf_centroids", "ivf_vectors"],
+        drop=["ivf_vectors_delta", "deleted_ids"],
     )
-    _finish_retrain_commit(index_dir)
     return {"n_vectors": cur.count(), "n_cells": cents.count()}
-
-
-def _write_retrain_marker(index_dir, stage, relations, retire) -> None:
-    """Atomically land the commit marker (write tmp + os.replace):
-    from here, recovery rolls the generation forward."""
-    import json
-    import os
-
-    marker = f"{index_dir}/{_RETRAIN_MARKER}"
-    with open(f"{marker}.tmp", "w") as fh:
-        json.dump(
-            {
-                "stage": os.path.basename(stage),
-                "relations": relations,
-                "retire": retire,
-            },
-            fh,
-        )
-    os.replace(f"{marker}.tmp", marker)
 
 
 def reindex_sq8_index(spark, index_dir: str, emb) -> dict:
@@ -1767,26 +1695,22 @@ def reindex_sq8_index(spark, index_dir: str, emb) -> dict:
     appended batches — exactly what a production reindex job reads),
     applies the store's pending tombstones to it, and rebuilds all
     three relations (centroids, affine stats, byte codes) through
-    `build_ivf_sq8_index` into a staged generation committed with the
-    same marker protocol as the flat retrain — one atomic commit point,
-    delta + tombstones retired in-generation, idempotent roll-forward,
-    pre-commit stages swept. Returns {n_vectors, n_cells}."""
-    import tempfile
-
-    _finish_retrain_commit(index_dir)
+    `build_ivf_sq8_index` into a stage, swapped in by one store commit
+    that also drops the delta and the tombstones. Returns
+    {n_vectors, n_cells}."""
+    recover(index_dir)
     cur = (
         apply_tombstones(spark, index_dir, emb.select("vec_id", "embedding"))
         .localCheckpoint()
     )
-    stage = tempfile.mkdtemp(prefix="_retrain_stage_", dir=index_dir)
+    stage = begin(index_dir)
     build_ivf_sq8_index(spark, None, stage, emb=cur)
-    _write_retrain_marker(
+    commit(
         index_dir,
         stage,
-        relations=["ivf_centroids", "sq8_stats", "sq8_codes"],
-        retire=["sq8_codes_delta", "deleted_ids"],
+        replace=["ivf_centroids", "sq8_stats", "sq8_codes"],
+        drop=["sq8_codes_delta", "deleted_ids"],
     )
-    _finish_retrain_commit(index_dir)
     n_cells = read_parquet_memo(spark, f"{index_dir}/ivf_centroids").count()
     return {"n_vectors": cur.count(), "n_cells": n_cells}
 
@@ -1796,12 +1720,11 @@ def read_ivf_flat_store(spark, index_dir: str):
     exists), both carrying ``cell_pt`` as a partition column so a probe
     filter prunes BOTH scans. Tombstones are NOT applied here — serve
     paths layer :func:`apply_tombstones` so the no-delete plan stays
-    join-free. Completes any committed-but-torn retrain first (one
-    isfile check in the common case) — a crash mid-retrain must never
-    serve a folded delta on top of the rewritten main."""
+    join-free. Finishes any pending store commit first (one stat in the
+    common case)."""
     import os
 
-    _finish_retrain_commit(index_dir)
+    recover(index_dir)
     cols = ["vec_id", "embedding", "cell", "cell_pt"]
     main = read_parquet_memo(spark, f"{index_dir}/ivf_vectors").select(*cols)
     delta_dir = f"{index_dir}/ivf_vectors_delta"
@@ -1812,15 +1735,8 @@ def read_ivf_flat_store(spark, index_dir: str):
 
 def fold_index_delta(spark, index_dir: str) -> None:
     """Minor compaction: fold the streamed delta batches into the main
-    store (ONE batch append — the rows were already cell-assigned at
-    ingest) and drop the delta dir; a following
-    :func:`compact_index_cells` restores one-file-per-cell. Crash
-    safety: the fold APPENDS before it deletes, so a crash between the
-    two leaves rows duplicated across main+delta — re-running the fold
-    after restoring the delta is NOT idempotent; production wraps this
-    in the WAP pointer pattern (`sources/publish.py`) or simply serves
-    main ∪ delta until a quiet maintenance window."""
-    _finish_retrain_commit(index_dir)
+    store and drop the delta dir (one store commit); a following
+    :func:`compact_index_cells` restores one-file-per-cell."""
     fold_store_delta(spark, index_dir, "ivf_vectors")
 
 
@@ -1845,6 +1761,7 @@ def delete_from_index(spark, index_dir: str, ids) -> None:
     or a one-column DataFrame (written through, never collected)."""
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
+    recover(index_dir)
     if isinstance(ids, list):
         df = local_frame(spark, [(int(i),) for i in ids], "vec_id long")
     else:
@@ -1872,90 +1789,59 @@ def compact_index_cells(spark, index_dir: str, cells=None) -> dict:
     per-directory compaction contract as `_write_guarded`), applying
     pending tombstones. ``cells`` bounds the rewrite to the listed cell
     ids (the daily-maintenance shape: compact only the cells the day's
-    appends touched): untouched ``cell_pt=`` directories MOVE into the
-    new store by filesystem rename — O(1) per directory, no read, no
-    rewrite — so the pass is O(touched data), not O(store). Default
-    rewrites all cells.
+    appends touched): only those ``cell_pt=`` dirs are replaced (or
+    dropped, when tombstones emptied them) and untouched cells never
+    move, so the pass is O(touched data), not O(store). Default
+    rewrites every relation whole.
 
     Tombstones are applied to every rewritten cell; the tombstone table
-    is cleared only after a FULL compaction with NO streaming delta dir
+    is dropped only by a FULL compaction with NO streaming delta dir
     present (a bounded pass leaves it in place for the cells it didn't
     touch, and a delta may hold deleted rows this pass never rewrites —
-    re-applying at serve time is an idempotent anti-join; fold the
-    delta first to retire both). Swap is write-staging-then-rename:
-    the rewritten store lands in a sibling staging dir, then replaces
-    the live dir in two renames — on a POSIX fs readers never observe
-    a half-written store (on an object store the same pattern runs
-    through a manifest pointer, cf. `sources/publish.py`). Returns
+    clearing then would RESURRECT them; re-applying at serve time is an
+    idempotent anti-join; fold the delta first to retire both). All
+    relations swap in one store commit. Returns
     {store: parquet_files_after}."""
     import os
-    import shutil as sh
-    import tempfile
 
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
-    out = {}
     full = cells is None
-    cell_set = None if full else {int(c) for c in cells}
-    # crash recovery + sweep from a previously interrupted compaction:
-    # a crash BETWEEN the two renames leaves the data only in
-    # `<store>.old` (live dir absent) — restore it; any other leftover
-    # (.old beside a live dir, orphan staging) is invisible to readers
-    # ("_"-prefixed dirs are ignored by Spark) and swept. A COMMITTED
-    # retrain rolls forward first (marker protocol), so the sweep below
-    # only ever sees PRE-commit retrain stages — those roll back.
-    _finish_retrain_commit(index_dir)
-    for junk in sorted(os.listdir(index_dir)) if os.path.isdir(index_dir) else []:
-        path = os.path.join(index_dir, junk)
-        if junk.endswith(".old"):
-            live_of = path[: -len(".old")]
-            if not os.path.isdir(live_of):
-                os.rename(path, live_of)
-            else:
-                sh.rmtree(path, ignore_errors=True)
-        elif "_compact_" in junk or junk.startswith("_retrain_stage_"):
-            sh.rmtree(path, ignore_errors=True)
-    for store in _INDEX_STORES:
-        live = f"{index_dir}/{store}"
-        if not os.path.isdir(live):
-            continue
-        df = read_parquet_memo(spark, live)
+    cell_ids = None if full else sorted({int(c) for c in cells})
+    stage = begin(index_dir)
+    stores = [s for s in _INDEX_STORES if os.path.isdir(f"{index_dir}/{s}")]
+    replace, drop = [], []
+    for store in stores:
+        df = read_parquet_memo(spark, f"{index_dir}/{store}")
         if not full:
-            df = df.where(F.col("cell_pt").isin(sorted(cell_set)))
+            df = df.where(F.col("cell_pt").isin(cell_ids))
         df = apply_tombstones(spark, index_dir, df)
-        staging = tempfile.mkdtemp(prefix=f"_{store}_compact_", dir=index_dir)
-        # the write EXECUTES the read — the live dir is intact until
-        # both renames below
-        write_table(df, staging, partition_by=["cell_pt"], mode="overwrite")
-        if not full:
-            # untouched cells move by rename — no read, no rewrite
-            for entry in os.listdir(live):
-                if not entry.startswith("cell_pt="):
-                    continue
-                if int(entry.split("=", 1)[1]) not in cell_set:
-                    os.rename(f"{live}/{entry}", f"{staging}/{entry}")
-        old = f"{live}.old"
-        os.rename(live, old)
-        os.rename(staging, live)
-        sh.rmtree(old, ignore_errors=True)
-        out[store] = sum(
-            1
-            for _, _, files in os.walk(live)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    # tombstones may only be cleared when every store they mask was
-    # rewritten: a bounded pass skips cells, and a streaming DELTA dir
-    # (not in _INDEX_STORES) may still hold deleted rows that only the
-    # serve-time anti-join hides — clearing then would RESURRECT them.
-    # Run fold_index_delta before a full compaction to retire both.
+        write_table(df, f"{stage}/{store}", partition_by=["cell_pt"])
+        if full:
+            replace.append(store)
+            continue
+        for c in cell_ids:
+            part = f"{store}/cell_pt={c}"
+            if os.path.isdir(f"{stage}/{part}"):
+                replace.append(part)
+            elif os.path.isdir(f"{index_dir}/{part}"):
+                drop.append(part)
     delta_present = any(
         os.path.isdir(f"{index_dir}/{d}")
         for d in ("ivf_vectors_delta", "sq8_codes_delta")
     )
-    if full and not delta_present and os.path.isdir(f"{index_dir}/deleted_ids"):
-        sh.rmtree(f"{index_dir}/deleted_ids", ignore_errors=True)
-    return out
+    if full and not delta_present:
+        drop.append("deleted_ids")
+    commit(index_dir, stage, replace=replace, drop=drop)
+    return {
+        store: sum(
+            1
+            for _, _, files in os.walk(f"{index_dir}/{store}")
+            for f in files
+            if f.endswith(".parquet")
+        )
+        for store in stores
+    }
 
 
 #: per-process index cache ((sf_dir, kind) -> built index dir): the
