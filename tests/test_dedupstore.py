@@ -97,11 +97,11 @@ def _served_state(spark, d):
     """Every relation the store serves: postings, fingerprints, doc
     sizes and the summed shingle stats (rows kept as lists, so a
     doubled row shows)."""
-    from udacity_dend_capstone_immigration_spark.workload.dedupstore import _union_delta
+    from udacity_dend_capstone_immigration_spark.sources.store import read_with_delta
 
     rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     stats = (
-        _union_delta(spark, d, "shingle_df", ["g", "df"])
+        read_with_delta(spark, d, "shingle_df", ["g", "df"])
         .groupBy("g")
         .agg(F.sum("df").alias("df"))
         .where("df != 0")

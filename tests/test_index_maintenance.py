@@ -390,6 +390,33 @@ def test_full_compaction_keeps_tombstones_while_delta_exists(spark):
     assert raw.where(F.col("vec_id").isin(dead)).count() == 0
 
 
+def test_full_compaction_keeps_tombstones_while_pq_delta_exists(spark):
+    """Regression: the full compaction decided "no delta present" from
+    the flat and SQ8 deltas only, so with a pending ``pq_codes`` delta
+    it cleared the tombstones and the next fold served a deleted PQ
+    vector again."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    new = F.col("vec_id") % 7 == 0
+    idx = V.build_ivfpq_index(
+        spark, SF_DIR, tempfile.mkdtemp(prefix="ivfpq_deltatomb_t_"), emb=emb.where(~new)
+    )
+    # one delta batch in the tier's on-disk layout: the new rows as a
+    # frozen-index append encodes them (appended to a copy of the index)
+    side = copy_store(idx)
+    V.append_to_ivfpq_index(spark, emb.where(new), side)
+    spark.read.parquet(f"{side}/pq_codes").where(new).write.partitionBy(
+        "cell_pt"
+    ).parquet(f"{idx}/pq_codes_delta/batch_pt=t-0")
+    V.delete_from_index(spark, idx, [0])  # vec_id 0 lives only in the delta
+    V.compact_index_cells(spark, idx)
+    assert V.run_due_maintenance(spark, idx, min_delta_batches=1) == ["pq_codes"]
+    served = V.apply_tombstones(spark, idx, spark.read.parquet(f"{idx}/pq_codes"))
+    assert served.where(F.col("vec_id") == 0).count() == 0
+    assert os.path.isdir(f"{idx}/deleted_ids")
+
+
 def test_stream_append_new_checkpoint_lineage_does_not_collide(spark):
     """A second ingestion wave with a FRESH checkpoint must not
     overwrite the first wave's batch directories (batch ids restart at

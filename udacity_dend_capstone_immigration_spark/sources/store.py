@@ -31,6 +31,31 @@ between two renames, no deleted rows resurrected.
 Only a writer sweeps unmarked stages (in :func:`begin`): a reader that
 swept could delete a stage a rewrite in the same process is still
 filling. Atomicity is against process crashes; nothing is fsynced.
+
+Delta tier
+----------
+A streamed append never writes into a live relation: a replayed
+micro-batch would double its rows there. Each micro-batch instead
+OVERWRITES its own directory ``{rel}_delta/batch_pt=<bpt>`` beside the
+main relation ``{rel}`` (:func:`stream_to_delta`,
+:func:`write_delta_batch`):
+
+- ``bpt`` is ``<lineage>-<batch_id>``, where the lineage is the first
+  8 hex digits of md5(checkpoint dir). Batch ids restart at 0 for
+  every new checkpoint, so without the lineage a second ingestion wave
+  would overwrite the first wave's ``batch_pt=...-0``.
+- A replayed batch (same checkpoint, same batch id) rewrites the same
+  directory with the same rows, so replay is idempotent by path.
+- Readers serve main ∪ delta (:func:`read_with_delta`). The delta
+  keeps the main relation's partition key under ``batch_pt``, so a
+  partition filter prunes both sides; with no pending batch the read
+  is a bare main scan, so serve plans carry no ``Union`` until a batch
+  lands.
+- :func:`fold_delta` is the minor compaction: the delta rows are
+  staged under the main relation's layout, and one commit moves them
+  into the live partition dirs (``add``) and deletes the delta
+  (``drop``), so a fold costs O(delta). :func:`pending` counts the
+  batches a maintenance policy weighs.
 """
 
 from __future__ import annotations
@@ -106,4 +131,82 @@ def recover(root: str) -> bool:
     if os.path.exists(stage):
         shutil.rmtree(stage)
     os.remove(marker)
+    return True
+
+
+def pending(root: str, rels) -> dict:
+    """``{rel: n}`` streamed batches waiting in each ``{rel}_delta``;
+    relations with none are left out."""
+    return {rel: n for rel in rels if (n := pending_batches(f"{root}/{rel}_delta"))}
+
+
+def stream_to_delta(
+    stream_df, root: str, checkpoint_dir: str, write_batch, what: str, timeout_sec=120
+) -> None:
+    """Drain ``stream_df`` (availableNow) into the delta tier of the
+    store at ``root``: ``write_batch(df, bpt)`` runs once per
+    micro-batch with its lineage-addressed batch name."""
+    import hashlib
+
+    from udacity_dend_capstone_immigration_spark.streaming.windows import (
+        _await_or_raise,
+    )
+
+    recover(root)
+    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
+    q = (
+        stream_df.writeStream.foreachBatch(
+            lambda df, batch_id: write_batch(df, f"{lineage}-{batch_id}")
+        )
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+    _await_or_raise(q, timeout_sec, f"{what}:{root}")
+
+
+def write_delta_batch(df, root: str, rel: str, bpt: str, partition_by=None) -> None:
+    """Overwrite ``{rel}_delta/batch_pt={bpt}`` with ``df``: one file
+    per touched ``partition_by`` value, or one file when unpartitioned."""
+    out = f"{root}/{rel}_delta/batch_pt={bpt}"
+    if partition_by is None:
+        df.coalesce(1).write.mode("overwrite").parquet(out)
+        return
+    df.repartition(partition_by).write.mode("overwrite").partitionBy(partition_by).parquet(out)
+
+
+def read_with_delta(spark, root: str, rel: str, cols, exclude_batch=None):
+    """``cols`` of ``rel``: main ∪ its pending delta batches, less the
+    batch ``exclude_batch`` (a replaying writer must not read the rows
+    its own first attempt landed). A bare main scan when no batch is
+    pending."""
+    from pyspark.sql import functions as F
+
+    from udacity_dend_capstone_immigration_spark.workload.base import read_parquet_memo
+
+    recover(root)
+    main = read_parquet_memo(spark, f"{root}/{rel}").select(*cols)
+    if not pending_batches(f"{root}/{rel}_delta"):
+        return main
+    delta = read_parquet_memo(spark, f"{root}/{rel}_delta")
+    if exclude_batch is not None:
+        delta = delta.where(F.col("batch_pt") != exclude_batch)
+    return main.unionByName(delta.select(*cols))
+
+
+def fold_delta(spark, root: str, rel: str, cols, partition_by: str) -> bool:
+    """Fold ``{rel}_delta`` into ``rel`` and drop it, in one commit.
+    ``cols`` include ``partition_by``, which the rows were assigned at
+    ingest, so the staged files move into the live partition dirs.
+    Returns whether a batch was pending."""
+    from udacity_dend_capstone_immigration_spark.sources.writers import write_table
+    from udacity_dend_capstone_immigration_spark.workload.base import read_parquet_memo
+
+    recover(root)
+    if not pending_batches(f"{root}/{rel}_delta"):
+        return False
+    stage = begin(root)
+    rows = read_parquet_memo(spark, f"{root}/{rel}_delta").select(*cols)
+    write_table(rows, f"{stage}/{rel}", partition_by=[partition_by])
+    commit(root, stage, add=[rel], drop=[f"{rel}_delta"])
     return True

@@ -55,8 +55,12 @@ from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.store import (
     begin,
     commit,
-    pending_batches,
+    fold_delta,
+    pending,
+    read_with_delta,
     recover,
+    stream_to_delta,
+    write_delta_batch,
 )
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 from udacity_dend_capstone_immigration_spark.workload.base import table
@@ -128,17 +132,9 @@ _CHUNK_COLS = ("doc_id", "chunk_idx", "start_tok", "n_tokens", "chunk_hash", "h_
 
 
 def read_chunk_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The full chunk relation: main ∪ pending streamed delta batches
-    (both partition-prunable on h_pt; the delta's extra batch_pt key is
-    projected away). With no delta on disk this is a bare main scan.
-    Finishes any pending store commit first."""
-    recover(store_dir)
-    main = read_parquet_memo(spark, f"{store_dir}/chunks")
-    delta_dir = f"{store_dir}/chunks_delta"
-    if not os.path.isdir(delta_dir):
-        return main
-    delta = read_parquet_memo(spark, delta_dir).select(*_CHUNK_COLS)
-    return main.select(*_CHUNK_COLS).unionByName(delta)
+    """The full chunk relation: main ∪ pending streamed delta batches,
+    both partition-prunable on h_pt."""
+    return read_with_delta(spark, store_dir, "chunks", _CHUNK_COLS)
 
 
 def stream_append_to_chunk_store(
@@ -149,59 +145,26 @@ def stream_append_to_chunk_store(
     timeout_sec: int = 120,
 ) -> None:
     """Drain a (doc_id, text, ...) document STREAM into the chunk
-    store's delta with exactly-once semantics. NEVER a plain append
-    from foreachBatch (replay duplicates — the CLAUDE.md rule): each
-    micro-batch OVERWRITES its own lineage-addressed
-    ``batch_pt={lineage}-{batch_id}`` directory, so a replayed batch
-    lands on itself. Chunking params come from meta/ (the frozen-
-    parameter append contract); serving reads main ∪ delta until
-    :func:`fold_chunk_store_delta` compacts."""
-    import hashlib
-
-    from udacity_dend_capstone_immigration_spark.streaming.windows import (
-        _await_or_raise,
-    )
-
-    recover(store_dir)
+    store's delta tier with exactly-once semantics. Chunking params
+    come from meta/ (the frozen-parameter append contract); serving
+    reads main ∪ delta until :func:`fold_chunk_store_delta` compacts."""
     size, stride, n_buckets = _read_meta(spark, store_dir)
-    # batch_id restarts at 0 per checkpoint lineage; namespace the
-    # partition value by the checkpoint identity so a second ingestion
-    # wave cannot overwrite wave 1's batch_pt=0 (the vectors pattern)
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
 
-    def write_batch(df, batch_id: int) -> None:
+    def write_batch(df, bpt: str) -> None:
         ch = chunk_documents(df, "doc_id", "text", size=size, stride=stride)
         ch = ch.withColumn("h_pt", _hex_bucket(F.col("chunk_hash"), n_buckets))
-        (
-            ch.repartition(F.col("h_pt"))  # one file per touched bucket
-            .write.mode("overwrite")
-            .partitionBy("h_pt")
-            .parquet(f"{store_dir}/chunks_delta/batch_pt={lineage}-{batch_id}")
-        )
+        write_delta_batch(ch, store_dir, "chunks", bpt, "h_pt")
 
-    q = (
-        stream_docs.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    stream_to_delta(
+        stream_docs, store_dir, checkpoint_dir, write_batch, "chunk_store_append", timeout_sec
     )
-    _await_or_raise(q, timeout_sec, f"chunk_store_append:{store_dir}")
 
 
 def fold_chunk_store_delta(spark: SparkSession, store_dir: str) -> bool:
     """Minor compaction: fold pending delta batches into the main
-    partitioned relation and drop the delta in one store commit (rows
-    were bucket-assigned at ingest, so the staged files move into the
-    live h_pt dirs — O(delta)). Returns whether a delta existed."""
-    recover(store_dir)
-    delta_dir = f"{store_dir}/chunks_delta"
-    if not os.path.isdir(delta_dir):
-        return False
-    stage = begin(store_dir)
-    rows = read_parquet_memo(spark, delta_dir).select(*_CHUNK_COLS)
-    write_table(rows, f"{stage}/chunks", partition_by=["h_pt"])
-    commit(store_dir, stage, add=["chunks"], drop=["chunks_delta"])
-    return True
+    partitioned relation in one store commit. Returns whether a batch
+    was pending."""
+    return fold_delta(spark, store_dir, "chunks", _CHUNK_COLS, "h_pt")
 
 
 def delete_docs_from_chunk_store(
@@ -435,12 +398,12 @@ def documents_stream_chunk_append(spark, sf_dir):
 
 # --- maintenance trigger (the vectors.maintenance_due twin for this
 # store): pure filesystem-metadata decision, pollable per ingest batch
-# for free. Unit = PENDING BATCHES (batch_pt= dirs), same calibration
+# for free. Unit = PENDING BATCHES (`store.pending`), same calibration
 # rationale as the ANN/dedup policies. Doc tombstones drive `due` like
 # the dedup store's (the fold applies them physically).
 def chunk_maintenance_due(store_dir: str, min_delta_batches: int = 4) -> dict:
     recover(store_dir)
-    n = pending_batches(f"{store_dir}/chunks_delta")
+    n = pending(store_dir, ["chunks"]).get("chunks", 0)
     tomb = os.path.isdir(f"{store_dir}/deleted_docs")
     return {
         "due": n >= min_delta_batches or tomb,

@@ -78,8 +78,12 @@ from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.store import (
     begin,
     commit,
+    pending,
     pending_batches,
+    read_with_delta,
     recover,
+    stream_to_delta,
+    write_delta_batch,
 )
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 from udacity_dend_capstone_immigration_spark.workload.base import query, table
@@ -235,7 +239,7 @@ def _batch_decisions(
     # stats may hold several rows per g (one per prior append/batch)
     # until a fold — SUM them in the probe's own shuffle
     stats = (
-        _union_delta(
+        read_with_delta(
             spark, index_dir, "shingle_df", ["g", "df", "g_pt"], exclude_batch
         )
         .where(F.col("g_pt").isin(touched))
@@ -297,7 +301,7 @@ def delete_from_dedup_index(
     )
     touched = sorted({r["g_pt"] for r in gd.select("g_pt").distinct().collect()})
     stats = (
-        _union_delta(spark, index_dir, "shingle_df", ["g", "df", "g_pt"])
+        read_with_delta(spark, index_dir, "shingle_df", ["g", "df", "g_pt"])
         .where(F.col("g_pt").isin(touched))
         .groupBy("g")
         .agg(F.sum("df").alias("df_m"))
@@ -369,50 +373,33 @@ def stream_append_to_dedup_index(
     timeout_sec: int = 120,
 ) -> None:
     """Drain a (doc_id, text, ...) document STREAM into the index's
-    delta stores with exactly-once semantics — the text twin of
+    delta tier (`sources.store`) — the text twin of
     `stream_append_to_ivf_flat_index`. Each micro-batch runs the same
-    cap-crossing decisions as the batch append, then OVERWRITES its
-    own lineage-addressed ``batch_pt`` directory under every delta
-    relation (replay lands the identical rows in the identical dirs;
-    the probe excludes the batch's own partial rows, so a replayed
-    decision is computed from exactly the pre-batch state). Serving
-    reads main ∪ delta through the read_* functions;
-    :func:`fold_dedup_index` absorbs the deltas at maintenance."""
-    import hashlib
-
-    from udacity_dend_capstone_immigration_spark.streaming.windows import (
-        _await_or_raise,
-    )
-
+    cap-crossing decisions as the batch append, probing the stats
+    without its own batch's rows, so a replayed batch decides from
+    exactly the pre-batch state and lands identical rows in every
+    delta relation. :func:`fold_dedup_index` absorbs the deltas at
+    maintenance."""
     k, cap, n_buckets = _read_meta(spark, index_dir)
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
 
-    def write_batch(df, batch_id: int) -> None:
-        bpt = f"{lineage}-{batch_id}"
+    def write_batch(df, bpt: str) -> None:
         e_b = shingle_rows(df, "doc_id", "text", k).withColumnRenamed(
             "shingle", "g"
         )
         gb, new_rows, cross = _batch_decisions(
             spark, e_b, index_dir, cap, n_buckets, exclude_batch=bpt
         )
-        (
-            new_rows.repartition(F.col("g_pt"))
-            .write.mode("overwrite")
-            .partitionBy("g_pt")
-            .parquet(f"{index_dir}/shingle_index_delta/batch_pt={bpt}")
-        )
+        write_delta_batch(new_rows, index_dir, "shingle_index", bpt, "g_pt")
         # deterministic decisions => skip-if-empty is replay-safe (a
         # replayed batch recomputes the same emptiness)
         if cross.limit(1).count():
-            cross.coalesce(1).write.mode("overwrite").parquet(
-                f"{index_dir}/dropped_shingles_delta/batch_pt={bpt}"
-            )
-        (
-            gb.select("g", F.col("df_b").alias("df"), "g_pt")
-            .repartition(F.col("g_pt"))
-            .write.mode("overwrite")
-            .partitionBy("g_pt")
-            .parquet(f"{index_dir}/shingle_df_delta/batch_pt={bpt}")
+            write_delta_batch(cross, index_dir, "dropped_shingles", bpt)
+        write_delta_batch(
+            gb.select("g", F.col("df_b").alias("df"), "g_pt"),
+            index_dir,
+            "shingle_df",
+            bpt,
+            "g_pt",
         )
         fp_b = (
             df.select(
@@ -420,51 +407,13 @@ def stream_append_to_dedup_index(
             )
             .withColumn("fp_pt", _hex_bucket(F.col("fp"), n_buckets))
         )
-        (
-            fp_b.repartition(F.col("fp_pt"))
-            .write.mode("overwrite")
-            .partitionBy("fp_pt")
-            .parquet(f"{index_dir}/fingerprints_delta/batch_pt={bpt}")
-        )
-        (
-            e_b.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/doc_sizes_delta/batch_pt={bpt}")
-        )
+        write_delta_batch(fp_b, index_dir, "fingerprints", bpt, "fp_pt")
+        sizes_b = e_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        write_delta_batch(sizes_b, index_dir, "doc_sizes", bpt)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    stream_to_delta(
+        doc_stream, index_dir, checkpoint_dir, write_batch, "dedup_index_append", timeout_sec
     )
-    _await_or_raise(q, timeout_sec, f"dedup_index_append:{index_dir}")
-
-
-def _union_delta(
-    spark: SparkSession,
-    index_dir: str,
-    rel: str,
-    cols: list,
-    exclude_batch: str | None = None,
-):
-    """main ∪ streamed delta for one store relation (the ANN stores'
-    main∪delta serving contract). ``exclude_batch`` drops one
-    ``batch_pt`` from the delta side — the stream writer's own-batch
-    exclusion: on a crash replay, the re-executing micro-batch must not
-    probe the partial rows its first attempt landed. Finishes any
-    pending store commit first."""
-    recover(index_dir)
-    main = read_parquet_memo(spark, f"{index_dir}/{rel}").select(*cols)
-    droot = f"{index_dir}/{rel}_delta"
-    if not pending_batches(droot):
-        return main
-    d = read_parquet_memo(spark, droot)
-    if exclude_batch is not None:
-        d = d.where(F.col("batch_pt") != exclude_batch)
-    return main.unionByName(d.select(*cols))
 
 
 def _dead_shingles(spark: SparkSession, index_dir: str):
@@ -508,7 +457,7 @@ def read_dedup_shingle_index(
     broadcast happens on its own — no hint needed (this is NOT the
     estimate-blind class)."""
     cols = ["g", "cid"] + (["g_pt"] if with_bucket else [])
-    idx = _union_delta(spark, index_dir, "shingle_index", cols)
+    idx = read_with_delta(spark, index_dir, "shingle_index", cols)
     dead = _dead_shingles(spark, index_dir)
     if dead is not None:
         idx = idx.join(dead, "g", "left_anti")
@@ -525,7 +474,7 @@ def read_dedup_fingerprints(spark: SparkSession, index_dir: str) -> DataFrame:
     duplicates are harmless; set-shaped consumers must ``.distinct()``.
     A fingerprint SHARED by a deleted and a live doc correctly
     survives: only the deleted doc's row dies."""
-    fp = _union_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
+    fp = read_with_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
     gone = _dead_docs(spark, index_dir)
     if gone is not None:
         fp = fp.join(gone, "cid", "left_anti")
@@ -535,7 +484,7 @@ def read_dedup_fingerprints(spark: SparkSession, index_dir: str) -> DataFrame:
 def read_dedup_doc_sizes(spark: SparkSession, index_dir: str) -> DataFrame:
     """(doc_id, n) distinct-shingle counts for every LIVE indexed doc
     (main ∪ streamed delta, deleted docs anti-joined out)."""
-    sz = _union_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
+    sz = read_with_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
     gone = _dead_docs(spark, index_dir)
     if gone is not None:
         sz = sz.join(
@@ -565,14 +514,14 @@ def _fold_commit(spark, index_dir: str, due=None, revived=None) -> None:
     # negative delete-retraction rows sum away here; a shingle whose
     # live df reached 0 drops its stats row entirely (rebuild parity)
     stats = (
-        _union_delta(spark, index_dir, "shingle_df", ["g", "df", "g_pt"])
+        read_with_delta(spark, index_dir, "shingle_df", ["g", "df", "g_pt"])
         .groupBy("g", "g_pt")
         .agg(F.sum("df").cast("long").alias("df"))
         .where(F.col("df") != 0)
         .select("g", "df", "g_pt")
     )
-    fp = _union_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
-    sizes = _union_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
+    fp = read_with_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
+    sizes = read_with_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
     gone = _dead_docs(spark, index_dir)
     if gone is not None:
         fp = fp.join(gone, "cid", "left_anti")
@@ -1031,9 +980,9 @@ def dedup_index_revive_roundtrip(spark, sf_dir):
 # store): the fold unit here is the WHOLE delta set — fold_dedup_index
 # absorbs every relation's batches and applies tombstones in one pass —
 # so the policy reports one fold decision, due when ANY relation's
-# delta file count crosses max(min_delta_files, ratio × its main
-# files) OR tombstones are pending (text tombstones are folded, not
-# compacted, so unlike the ANN stores they DO drive the fold here).
+# delta holds min_delta_batches pending batches OR tombstones are
+# pending (text tombstones are folded, not compacted, so unlike the
+# ANN stores they DO drive the fold here).
 DEDUP_DELTA_RELS = ("shingle_index", "shingle_df", "fingerprints", "doc_sizes")
 
 
@@ -1044,24 +993,15 @@ def dedup_maintenance_due(index_dir: str, min_delta_batches: int = 4) -> dict:
     `vectors.maintenance_due` (a file-count ratio fires after one
     bucketed batch — the delta the trigger should leave in place)."""
     recover(index_dir)
-    pending = {}
-    crossing = []
-    for rel in DEDUP_DELTA_RELS:
-        n = pending_batches(f"{index_dir}/{rel}_delta")
-        if n == 0:
-            continue
-        pending[rel] = n
-        if n >= min_delta_batches:
-            crossing.append(rel)
+    batches = pending(index_dir, DEDUP_DELTA_RELS)
+    crossing = [rel for rel, n in batches.items() if n >= min_delta_batches]
     tomb = os.path.isdir(f"{index_dir}/dropped_shingles") or pending_batches(
         f"{index_dir}/dropped_shingles_delta"
     )
     # doc tombstones (right-to-be-forgotten deletes): the fold applies
     # them physically, so they count toward due exactly like shingle
     # tombstones (r14 — the policy previously missed them)
-    doc_tomb = os.path.isdir(f"{index_dir}/deleted_docs") or pending_batches(
-        f"{index_dir}/deleted_docs_delta"
-    )
+    doc_tomb = os.path.isdir(f"{index_dir}/deleted_docs")
     # reverse cap-crossings awaiting re-index: REPORT-ONLY — clearing
     # them (`revive_shingles`) needs the live corpus, a job the poller
     # schedules explicitly, like ANN tombstone compaction
@@ -1072,7 +1012,7 @@ def dedup_maintenance_due(index_dir: str, min_delta_batches: int = 4) -> dict:
         "pending_tombstones": tomb,
         "pending_doc_tombstones": doc_tomb,
         "pending_revival": revival,
-        "pending": pending,
+        "pending": batches,
     }
 
 

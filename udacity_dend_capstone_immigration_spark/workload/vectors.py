@@ -21,8 +21,13 @@ from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.store import (
     begin,
     commit,
+    fold_delta,
+    pending,
     pending_batches,
+    read_with_delta,
     recover,
+    stream_to_delta,
+    write_delta_batch,
 )
 from udacity_dend_capstone_immigration_spark.workload.base import (
     ORACLES,
@@ -1169,35 +1174,48 @@ def append_to_ivfpq_index(spark, new_emb, index_dir: str) -> None:
     codebooks are immutable index artifacts (drift is an offline
     rebuild decision), so per-batch cost is O(batch), never O(corpus),
     and serving picks the new rows up with zero plan changes."""
-    from udacity_dend_capstone_immigration_spark.sources.writers import write_table
-
-    codes = _encode_against_index(spark, new_emb, index_dir)
-    write_table(
-        codes.withColumn("cell_pt", F.col("cell")),
-        f"{index_dir}/pq_codes",
-        partition_by=["cell_pt"],
-        mode="append",
-    )
+    _append_direct(spark, new_emb, index_dir, "pq_codes")
 
 
-def _encode_against_index(spark, new_emb, index_dir: str):
-    """Frozen-index encode of a batch: assign against the read-back
-    coarse centroids, PQ-encode against the read-back block codebooks —
-    one chained Arrow scan over the batch. Shared by the direct append
-    above and delta-landing writers (a streamed batch lands the same
-    rows in ``pq_codes_delta`` instead of main)."""
+def _frozen_encoder(spark, index_dir: str, store: str):
+    """The append encoder of one code store: a function from a
+    (vec_id, embedding) batch to ``store``'s rows (with ``cell_pt``),
+    assigned against the read-back FROZEN coarse centroids and, for SQ8
+    and PQ, encoded against the frozen affine stats or block codebooks
+    — one chained Arrow scan over the batch. Direct and streamed
+    appends both encode through it."""
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         Codebook,
         assign_nearest_arrow,
         pq_encode,
+        sq8_encode,
     )
 
     recover(index_dir)
     cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
     cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
-    books = load_pq_codebooks(spark, f"{index_dir}/pq_codebooks")
-    assigned = assign_nearest_arrow(new_emb, cb, "vec_id", keep_embedding=True)
-    return pq_encode(assigned, books, passthrough=("cell",))
+    stats = books = None
+    if store == "sq8_codes":
+        stats = load_sq8_stats(spark, f"{index_dir}/sq8_stats")
+    elif store == "pq_codes":
+        books = load_pq_codebooks(spark, f"{index_dir}/pq_codebooks")
+
+    def encode(emb):
+        rows = assign_nearest_arrow(emb, cb, "vec_id", keep_embedding=True)
+        if stats is not None:
+            rows = sq8_encode(rows, *stats, passthrough=("cell",))
+        elif books is not None:
+            rows = pq_encode(rows, books, passthrough=("cell",))
+        return rows.withColumn("cell_pt", F.col("cell"))
+
+    return encode
+
+
+def _append_direct(spark, new_emb, index_dir: str, store: str) -> None:
+    from udacity_dend_capstone_immigration_spark.sources.writers import write_table
+
+    rows = _frozen_encoder(spark, index_dir, store)(new_emb)
+    write_table(rows, f"{index_dir}/{store}", partition_by=["cell_pt"], mode="append")
 
 
 def load_pq_codebooks(spark, path: str) -> list:
@@ -1257,22 +1275,7 @@ def append_to_ivf_flat_index(spark, new_emb, index_dir: str) -> None:
     the cell-partitioned ``ivf_vectors`` table. O(batch), no
     retraining; `knn_ivf_served` picks the rows up with zero plan
     changes."""
-    from udacity_dend_capstone_immigration_spark.operators.similarity import (
-        Codebook,
-        assign_nearest_arrow,
-    )
-    from udacity_dend_capstone_immigration_spark.sources.writers import write_table
-
-    recover(index_dir)
-    cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
-    cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
-    assigned = assign_nearest_arrow(new_emb, cb, "vec_id", keep_embedding=True)
-    write_table(
-        assigned.withColumn("cell_pt", F.col("cell")),
-        f"{index_dir}/ivf_vectors",
-        partition_by=["cell_pt"],
-        mode="append",
-    )
+    _append_direct(spark, new_emb, index_dir, "ivf_vectors")
 
 
 # --- SQ8 (int8 scalar-quantized) persisted layout: the audit-backed
@@ -1364,184 +1367,63 @@ def append_to_sq8_index(spark, new_emb, index_dir: str) -> None:
     the cell-partitioned codes table. Values outside the trained
     [mn, mx] saturate (standard scalar-quantizer behavior; retrain =
     offline rebuild, same contract as the PQ codebooks)."""
-    from udacity_dend_capstone_immigration_spark.operators.similarity import (
-        Codebook,
-        assign_nearest_arrow,
-        sq8_encode,
-    )
-    from udacity_dend_capstone_immigration_spark.sources.writers import write_table
-
-    recover(index_dir)
-    cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
-    cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
-    mn, mx = load_sq8_stats(spark, f"{index_dir}/sq8_stats")
-    assigned = assign_nearest_arrow(new_emb, cb, "vec_id", keep_embedding=True)
-    codes = sq8_encode(assigned, mn, mx, passthrough=("cell",))
-    write_table(
-        codes.withColumn("cell_pt", F.col("cell")),
-        f"{index_dir}/sq8_codes",
-        partition_by=["cell_pt"],
-        mode="append",
-    )
+    _append_direct(spark, new_emb, index_dir, "sq8_codes")
 
 
-# --- STREAMING ingest into the persisted index (r11 verdict missing
-# #3): the batch append paths compose with the foreachBatch
-# exactly-once recipe via an LSM-style DELTA store — each micro-batch
-# assigns against the FROZEN read-back centroids and OVERWRITES its own
-# ``batch_pt=<n>`` directory under ``ivf_vectors_delta`` (a replayed
-# batch rewrites the same directory: idempotent-by-path, the
-# `run_foreach_batch_parquet` recipe applied to the index). A direct
-# append into the main store could double rows on replay — batch
-# addressing is what buys exactly-once. Serving reads main ∪ delta
-# (both cell_pt-partitioned, both probe-prunable); `fold_index_delta`
-# is the minor compaction folding the delta back into the main store.
+#: served columns per code store (``cell_pt`` is the partition key)
+_STORE_COLS = {
+    "pq_codes": ["vec_id", "codes", "cell", "cell_pt"],
+    "ivf_vectors": ["vec_id", "embedding", "cell", "cell_pt"],
+    "sq8_codes": ["vec_id", "codes", "cell", "cell_pt"],
+}
+
+
+def _stream_append(spark, stream_df, index_dir, checkpoint_dir, store, what, timeout_sec):
+    encode = _frozen_encoder(spark, index_dir, store)
+
+    def write_batch(df, bpt: str) -> None:
+        write_delta_batch(encode(df), index_dir, store, bpt, "cell_pt")
+
+    stream_to_delta(stream_df, index_dir, checkpoint_dir, write_batch, what, timeout_sec)
+
+
 def stream_append_to_ivf_flat_index(
     spark, stream_df, index_dir: str, checkpoint_dir: str, timeout_sec: int = 120
 ) -> None:
-    """Drain a (vec_id, embedding) STREAM into the flat index's delta
-    store with exactly-once semantics; O(batch) Arrow work per
-    micro-batch, frozen codebook, no retraining — faiss ``add`` at
-    ingestion cadence."""
-    from udacity_dend_capstone_immigration_spark.operators.similarity import (
-        Codebook,
-        assign_nearest_arrow,
+    """Drain a (vec_id, embedding) STREAM into the flat store's delta
+    tier (`sources.store`: exactly-once, served main ∪ delta until
+    :func:`fold_index_delta`); O(batch) Arrow work per micro-batch,
+    frozen codebook, no retraining — faiss ``add`` at ingestion
+    cadence."""
+    _stream_append(
+        spark, stream_df, index_dir, checkpoint_dir, "ivf_vectors", "index_append", timeout_sec
     )
-    from udacity_dend_capstone_immigration_spark.streaming.windows import (
-        _await_or_raise,
-    )
-
-    import hashlib
-
-    recover(index_dir)
-    cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
-    cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
-    # batch_id restarts at 0 for every NEW checkpoint lineage, so batch
-    # addressing alone is only unique per lineage — a second ingestion
-    # wave (fresh checkpoint, un-folded delta) would overwrite wave 1's
-    # batch_pt=0. Namespacing the partition value by the checkpoint
-    # identity keeps replay idempotent (same checkpoint → same dir)
-    # without cross-wave collisions.
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
-
-    def write_batch(df, batch_id: int) -> None:
-        assigned = assign_nearest_arrow(df, cb, "vec_id", keep_embedding=True)
-        (
-            assigned.withColumn("cell_pt", F.col("cell"))
-            .repartition(F.col("cell_pt"))  # one file per touched cell
-            .write.mode("overwrite")
-            .partitionBy("cell_pt")
-            .parquet(f"{index_dir}/ivf_vectors_delta/batch_pt={lineage}-{batch_id}")
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    _await_or_raise(q, timeout_sec, f"index_append:{index_dir}")
 
 
 def stream_append_to_sq8_index(
     spark, stream_df, index_dir: str, checkpoint_dir: str, timeout_sec: int = 120
 ) -> None:
     """SQ8 twin of :func:`stream_append_to_ivf_flat_index`: each
-    micro-batch assigns against the FROZEN read-back centroids and
-    byte-encodes against the FROZEN affine stats (out-of-range values
-    saturate — the scalar-quantizer append contract), overwriting its
-    own lineage-addressed ``batch_pt`` directory in the
-    ``sq8_codes_delta`` store. Same exactly-once and serving (main ∪
-    delta) semantics; :func:`fold_sq8_delta` is the minor compaction."""
-    import hashlib
-
-    from udacity_dend_capstone_immigration_spark.operators.similarity import (
-        Codebook,
-        assign_nearest_arrow,
-        sq8_encode,
+    micro-batch byte-encodes against the FROZEN affine stats
+    (out-of-range values saturate — the scalar-quantizer append
+    contract) into the ``sq8_codes`` delta tier."""
+    _stream_append(
+        spark, stream_df, index_dir, checkpoint_dir, "sq8_codes", "sq8_append", timeout_sec
     )
-    from udacity_dend_capstone_immigration_spark.streaming.windows import (
-        _await_or_raise,
-    )
-
-    recover(index_dir)
-    cents_rows = _read_bounded_artifact(f"{index_dir}/ivf_centroids")
-    cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents_rows])
-    mn, mx = load_sq8_stats(spark, f"{index_dir}/sq8_stats")
-    lineage = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
-
-    def write_batch(df, batch_id: int) -> None:
-        assigned = assign_nearest_arrow(df, cb, "vec_id", keep_embedding=True)
-        codes = sq8_encode(assigned, mn, mx, passthrough=("cell",))
-        (
-            codes.withColumn("cell_pt", F.col("cell"))
-            .repartition(F.col("cell_pt"))  # one file per touched cell
-            .write.mode("overwrite")
-            .partitionBy("cell_pt")
-            .parquet(f"{index_dir}/sq8_codes_delta/batch_pt={lineage}-{batch_id}")
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    _await_or_raise(q, timeout_sec, f"sq8_append:{index_dir}")
 
 
 def read_sq8_store(spark, index_dir: str):
     """Serving view of the SQ8 store: main ∪ delta, both
     cell_pt-prunable (the `read_ivf_flat_store` contract for byte
-    codes; tombstones layered by the caller). Finishes any pending
-    store commit first."""
-    import os
-
-    recover(index_dir)
-    cols = ["vec_id", "codes", "cell", "cell_pt"]
-    main = read_parquet_memo(spark, f"{index_dir}/sq8_codes").select(*cols)
-    delta_dir = f"{index_dir}/sq8_codes_delta"
-    if not os.path.isdir(delta_dir):
-        return main
-    return main.unionByName(read_parquet_memo(spark, delta_dir).select(*cols))
-
-
-#: payload columns per code store (shared by the generic delta fold)
-_STORE_COLS = {
-    "ivf_vectors": ["vec_id", "embedding", "cell"],
-    "sq8_codes": ["vec_id", "codes", "cell"],
-    "pq_codes": ["vec_id", "codes", "cell"],
-}
+    codes; tombstones layered by the caller)."""
+    return read_with_delta(spark, index_dir, "sq8_codes", _STORE_COLS["sq8_codes"])
 
 
 def fold_store_delta(spark, index_dir: str, store: str) -> bool:
-    """Generic minor compaction: fold ``{store}_delta`` into the main
-    cell-partitioned ``store`` and drop the delta in one store commit.
-    The rows were cell-assigned at ingest, so the staged files move into
-    the live cell dirs (O(delta)). Returns whether a delta existed."""
-    import os
-
-    from udacity_dend_capstone_immigration_spark.sources.writers import write_table
-
-    recover(index_dir)
-    delta_dir = f"{index_dir}/{store}_delta"
-    if not os.path.isdir(delta_dir):
-        return False
-    stage = begin(index_dir)
-    rows = read_parquet_memo(spark, delta_dir).select(*_STORE_COLS[store])
-    write_table(
-        rows.withColumn("cell_pt", F.col("cell")),
-        f"{stage}/{store}",
-        partition_by=["cell_pt"],
-    )
-    commit(index_dir, stage, add=[store], drop=[f"{store}_delta"])
-    return True
-
-
-def fold_sq8_delta(spark, index_dir: str) -> None:
-    """Fold streamed SQ8 delta batches into the main codes store and
-    drop the delta."""
-    fold_store_delta(spark, index_dir, "sq8_codes")
+    """Minor compaction of one code store: fold ``{store}_delta`` into
+    the cell-partitioned main store in one commit. Returns whether a
+    batch was pending."""
+    return fold_delta(spark, index_dir, store, _STORE_COLS[store], "cell_pt")
 
 
 def _parquet_file_count(d: str) -> int:
@@ -1568,7 +1450,7 @@ def maintenance_due(
     run them. Pure filesystem-metadata decision — no Spark job, so an
     ingestion scheduler can poll it every batch for free.
 
-    The unit is PENDING BATCHES (``batch_pt=`` dirs in the delta), not
+    The unit is PENDING BATCHES (streamed batch dirs in the delta), not
     raw file counts: every streamed batch writes ~one file per touched
     cell, so a file-count ratio fires after the very first batch —
     exactly the single-batch delta the trigger should leave in place
@@ -1598,21 +1480,14 @@ def maintenance_due(
     import os
 
     recover(index_dir)
-    fold = []
-    pending = {}
-    for store in _INDEX_STORES:
-        n = pending_batches(f"{index_dir}/{store}_delta")
-        if n == 0:
-            continue
-        pending[store] = n
-        if n >= min_delta_batches:
-            fold.append(store)
+    batches = pending(index_dir, _INDEX_STORES)
+    fold = [store for store, n in batches.items() if n >= min_delta_batches]
     tomb = os.path.isdir(f"{index_dir}/deleted_ids")
     report = {
         "due": bool(fold) or tomb,
         "fold": fold,
         "compact_tombstones": tomb,
-        "pending": pending,
+        "pending": batches,
     }
     if spark is not None and os.path.isdir(f"{index_dir}/ivf_centroids") and os.path.isdir(
         f"{index_dir}/ivf_vectors"
@@ -1720,17 +1595,8 @@ def read_ivf_flat_store(spark, index_dir: str):
     exists), both carrying ``cell_pt`` as a partition column so a probe
     filter prunes BOTH scans. Tombstones are NOT applied here — serve
     paths layer :func:`apply_tombstones` so the no-delete plan stays
-    join-free. Finishes any pending store commit first (one stat in the
-    common case)."""
-    import os
-
-    recover(index_dir)
-    cols = ["vec_id", "embedding", "cell", "cell_pt"]
-    main = read_parquet_memo(spark, f"{index_dir}/ivf_vectors").select(*cols)
-    delta_dir = f"{index_dir}/ivf_vectors_delta"
-    if not os.path.isdir(delta_dir):
-        return main
-    return main.unionByName(read_parquet_memo(spark, delta_dir).select(*cols))
+    join-free."""
+    return read_with_delta(spark, index_dir, "ivf_vectors", _STORE_COLS["ivf_vectors"])
 
 
 def fold_index_delta(spark, index_dir: str) -> None:
@@ -1746,7 +1612,7 @@ def fold_index_delta(spark, index_dir: str) -> None:
 # both or the routed read degrades into a small-files scan at daily
 # ingestion cadence.
 #: code-store subdirs a maintenance pass may find in an index dir
-_INDEX_STORES = ("pq_codes", "ivf_vectors", "sq8_codes")
+_INDEX_STORES = tuple(_STORE_COLS)
 
 
 def delete_from_index(spark, index_dir: str, ids) -> None:
@@ -1795,9 +1661,9 @@ def compact_index_cells(spark, index_dir: str, cells=None) -> dict:
     rewrites every relation whole.
 
     Tombstones are applied to every rewritten cell; the tombstone table
-    is dropped only by a FULL compaction with NO streaming delta dir
-    present (a bounded pass leaves it in place for the cells it didn't
-    touch, and a delta may hold deleted rows this pass never rewrites —
+    is dropped only by a FULL compaction with NO batch pending in any
+    store's delta (a bounded pass leaves it in place for the cells it
+    didn't touch, and a delta may hold deleted rows this pass never rewrites —
     clearing then would RESURRECT them; re-applying at serve time is an
     idempotent anti-join; fold the delta first to retire both). All
     relations swap in one store commit. Returns
@@ -1826,11 +1692,7 @@ def compact_index_cells(spark, index_dir: str, cells=None) -> dict:
                 replace.append(part)
             elif os.path.isdir(f"{index_dir}/{part}"):
                 drop.append(part)
-    delta_present = any(
-        os.path.isdir(f"{index_dir}/{d}")
-        for d in ("ivf_vectors_delta", "sq8_codes_delta")
-    )
-    if full and not delta_present:
+    if full and not pending(index_dir, _INDEX_STORES):
         drop.append("deleted_ids")
     commit(index_dir, stage, replace=replace, drop=drop)
     return {
@@ -2288,15 +2150,9 @@ def ann_index_maintenance_roundtrip(spark, sf_dir):
     append_to_ivfpq_index(spark, new.where(F.col("vec_id") % 2 == 0), out)
     # the other half lands the way a stream ingests it: encoded against
     # the frozen index, batch-addressed into the pq_codes delta
-    delta_codes = _encode_against_index(
-        spark, new.where(F.col("vec_id") % 2 != 0), out
-    )
-    (
-        delta_codes.withColumn("cell_pt", F.col("cell"))
-        .repartition(F.col("cell_pt"))
-        .write.mode("overwrite")
-        .partitionBy("cell_pt")
-        .parquet(f"{out}/pq_codes_delta/batch_pt=maint-0")
+    encode = _frozen_encoder(spark, out, "pq_codes")
+    write_delta_batch(
+        encode(new.where(F.col("vec_id") % 2 != 0)), out, "pq_codes", "maint-0", "cell_pt"
     )
     # min_delta_batches=1: at sf0.01 the one simulated batch is the
     # whole delta; production polls with the default (4 batches)
@@ -2377,11 +2233,6 @@ def ann_retrain_roundtrip(spark, sf_dir):
     codebook, payload bit-intact."""
     import tempfile
 
-    from udacity_dend_capstone_immigration_spark.operators.similarity import (
-        Codebook,
-        assign_nearest_arrow,
-    )
-
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.where(F.col("vec_id") % 7 != 0)
     new = emb.where(F.col("vec_id") % 7 == 0)
@@ -2397,16 +2248,8 @@ def ann_retrain_roundtrip(spark, sf_dir):
             F.col("embedding"), lambda x: (x * F.lit(-1.0)).cast("float")
         ).alias("embedding"),
     )
-    cents = _read_bounded_artifact(f"{idx}/ivf_centroids")
-    cb = Codebook([(r["cent_id"], r["cent_emb"]) for r in cents])
-    (
-        assign_nearest_arrow(drifted, cb, "vec_id", keep_embedding=True)
-        .withColumn("cell_pt", F.col("cell"))
-        .repartition(1)
-        .write.mode("overwrite")
-        .partitionBy("cell_pt")
-        .parquet(f"{idx}/ivf_vectors_delta/batch_pt=rt-0")
-    )
+    encode = _frozen_encoder(spark, idx, "ivf_vectors")
+    write_delta_batch(encode(drifted), idx, "ivf_vectors", "rt-0", "cell_pt")
     delete_from_index(
         spark, idx, emb.where(F.col("vec_id") % 5 == 2).select("vec_id")
     )
