@@ -86,3 +86,15 @@ def crash_matrix(base: str, op, serve, points=None, rerun: bool = False) -> int:
             op(store)
             assert serve(store) == post, f"re-run after a crash at mutation {k}"
     return seen[0]
+
+
+def spread_points(base: str, op) -> list:
+    """First, second, middle and last mutation of an uncrashed
+    ``op(store)`` (counted on a copy of ``base``): the ``points`` of a
+    :func:`crash_matrix` whose full sweep is too long for the default
+    tier, such as an append that moves one file per touched partition."""
+    ref = copy_store(base)
+    with crash_at(ref) as seen:
+        op(ref)
+    n = seen[0]
+    return sorted({1, min(2, n), max(1, n // 2), n})

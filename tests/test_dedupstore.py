@@ -446,3 +446,35 @@ def test_every_dedup_store_rewrite_survives_a_crash_at_every_step(spark, tmp_pat
         d, lambda x: fold_dedup_index(spark, x), lambda x: _served_state(spark, x)
     )
     assert n_fold >= 8 and n_revive >= 8
+
+
+def test_maintenance_due_flags_are_bools_with_only_streamed_tombstones(tmp_path):
+    """Regression: with only a streamed tombstone batch on disk the
+    policy reported ``due`` and ``pending_tombstones`` as the batch
+    count (1) instead of ``True``."""
+    from udacity_dend_capstone_immigration_spark.workload.dedupstore import (
+        dedup_maintenance_due,
+    )
+
+    (tmp_path / "dropped_shingles_delta" / "batch_pt=a-0").mkdir(parents=True)
+    r = dedup_maintenance_due(str(tmp_path))
+    assert r["due"] is True
+    assert r["pending_tombstones"] is True
+
+
+def test_append_crash_leaves_batch_absent_or_whole(spark, store):
+    """A direct append stages all five relations and lands them in one
+    commit: crashed at its marker, inside the roll-forward or at its
+    last step, the store serves the batch absent or whole, never
+    partial or doubled."""
+    from tests.fixtures.crash import crash_matrix, spread_points
+
+    def op(d):
+        append_to_dedup_index(spark, _docs(spark, BATCH), d)
+
+    crash_matrix(
+        store,
+        op,
+        lambda d: _served_state(spark, d),
+        points=spread_points(store, op),
+    )

@@ -284,6 +284,31 @@ def test_bounded_compaction_crash_keeps_untouched_cells(spark):
     )
 
 
+def test_direct_append_crash_leaves_batch_absent_or_whole(spark):
+    """A direct append is one staged store commit: crashed at its
+    marker, inside the roll-forward or at its last step, the flat store
+    serves the batch absent or whole, never partial or doubled."""
+    from tests.fixtures.crash import spread_points
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    idx = V.build_ivf_flat_index(
+        spark,
+        SF_DIR,
+        tempfile.mkdtemp(prefix="ivfflat_appendcrash_t_"),
+        emb=emb.where(F.col("vec_id") % 3 != 0),
+    )
+
+    def op(d):
+        V.append_to_ivf_flat_index(spark, emb.where(F.col("vec_id") % 3 == 0), d)
+
+    crash_matrix(idx, op, lambda d: _served(spark, d), points=spread_points(idx, op))
+    whole = copy_store(idx)
+    op(whole)
+    assert len(_served(spark, whole)) == emb.count()
+
+
 @pytest.mark.slow
 def test_every_vector_store_rewrite_survives_a_crash_at_every_step(spark):
     """Delta fold, full and bounded compaction, retrain and SQ8 reindex,

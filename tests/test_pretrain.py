@@ -166,15 +166,16 @@ def test_bpe_driver_train_equals_distributed(spark, monkeypatch):
     # data — same merges (same (cnt DESC, lft ASC, rgt ASC) argmax),
     # same final encoded vocab — or the gate silently changes every
     # BPE-derived query with corpus size.
+    from udacity_dend_capstone_immigration_spark.operators import cumsum as C
     from udacity_dend_capstone_immigration_spark.workload import pretrain as P
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
-    monkeypatch.setattr(P, "_BPE_DRIVER_CORPUS_BYTES", 1 << 60)
+    monkeypatch.setattr(C, "DRIVER_BYTES", 1 << 60)
     merges_drv, words_drv = P._bpe_train(spark, docs)
     drv = {r["term"]: (r["cnt"], tuple(r["syms"])) for r in words_drv.collect()}
 
-    monkeypatch.setattr(P, "_BPE_DRIVER_CORPUS_BYTES", -1)
+    monkeypatch.setattr(C, "DRIVER_BYTES", -1)
     merges_dist, words_dist = P._bpe_train(spark, docs)
     dist = {r["term"]: (r["cnt"], tuple(r["syms"])) for r in words_dist.collect()}
 

@@ -112,3 +112,38 @@ def test_write_table_orc_dispatch_and_guardrail(spark, fact, tmp_path):
     assert spark.read.orc(out).count() == 60
     with pytest.raises(PartitionExplosionError):
         write_table(fact, out, fmt="orc", partition_by=("v",), max_partitions=5)
+
+
+def test_fresh_path_guard_is_single_pass(spark, fact, tmp_path, monkeypatch):
+    """A write into a new path runs no estimate pass: it counts the
+    directories it made, and on overflow removes them all and raises."""
+    from udacity_dend_capstone_immigration_spark.sources import writers as W
+
+    def no_estimate(*_):
+        raise AssertionError("estimate pass on a fresh path")
+
+    monkeypatch.setattr(W, "estimate_partition_count", no_estimate)
+    out = tmp_path / "fresh"
+    with pytest.raises(PartitionExplosionError, match="directories"):
+        write_parquet(fact, str(out), partition_by=("v",), max_partitions=10)
+    assert not out.exists()
+    write_parquet(fact, str(out), partition_by=("entry_year", "entry_month"), max_partitions=2)
+    assert spark.read.parquet(str(out)).count() == 60
+
+
+def test_existing_path_explosion_changes_no_file(spark, fact, tmp_path):
+    out = str(tmp_path / "fact")
+    write_parquet(fact, out, partition_by=("entry_month",))
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), out), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, files in os.walk(out)
+            for f in files
+        )
+
+    before = tree()
+    with pytest.raises(PartitionExplosionError, match="directories"):
+        write_parquet(fact, out, partition_by=("v",), mode="append", max_partitions=10)
+    assert tree() == before
+    assert spark.read.parquet(out).count() == 60

@@ -10,17 +10,103 @@ factory, ``local[$SPARK_GRAFT_CPUS]`` — default 32 — with as many
 shuffle partitions). Note explain() shows the INITIAL AQE plan
 (isFinalPlan=false); claims about AQE-final shapes cite the SQL-tab
 metrics or measured numbers instead.
+
+Plans are written NORMALIZED (:func:`normalize`): what depends on the
+process rather than on the plan is replaced, so a plain ``diff -r`` of
+two captures (same suffix, two out dirs) shows only plan changes.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
 from udacity_dend_capstone_immigration_spark.session import get_spark_session  # noqa: E402
 from udacity_dend_capstone_immigration_spark.workload import QUERIES  # noqa: E402
+
+
+#: roots of the per-run dirs a plan can name: the system tempdir and the
+#: stream scratch root (`streaming.windows` prefers /dev/shm)
+_TMP = "|".join(re.escape(d) for d in (tempfile.gettempdir(), "/dev/shm"))
+#: lists whose order follows expression ids downstream of an ``Expand``
+#: (the exchange's ``hashpartitioning`` keys too)
+_ID_ORDERED = re.compile(r"((?:Input|Keys|Results|Output) \[\d+\]: )\[(.*)\]")
+_HASH = "Arguments: hashpartitioning("
+
+
+def _split_top(s: str) -> list[str]:
+    """Split ``s`` at the ", " separators outside any bracket."""
+    out, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif depth == 0 and s.startswith(", ", i):
+            out.append(s[start:i])
+            start = i + 2
+    return out + [s[start:]]
+
+
+def _canonical_expand(args: str) -> tuple[str, dict]:
+    """An ``Expand`` node's ``[[projection], ...], [output]`` arguments
+    in a canonical order, and the renumbering of its ``gid`` values.
+    Spark's multi-distinct rewrite orders the columns and numbers the
+    distinct groups by expression id, which depends on what ran earlier
+    in the process, not on the plan: columns are sorted by output name,
+    projections by their non-gid values, and the gids renumbered in
+    that order."""
+    projs, outs = _split_top(args)
+    rows = [_split_top(p[1:-1]) for p in _split_top(projs[1:-1])]
+    cols = sorted(zip(_split_top(outs[1:-1]), *rows))
+    names = [c[0] for c in cols]
+    rows = [list(r) for r in list(zip(*cols))[1:]]
+    renumber = {}
+    if "gid#N" in names:
+        g = names.index("gid#N")
+        gids = sorted((r[g] for r in rows), key=int)
+        rows.sort(key=lambda r: r[:g] + r[g + 1 :])
+        for r, new in zip(rows, gids):
+            renumber[r[g]], r[g] = new, new
+    body = ", ".join("[" + ", ".join(r) + "]" for r in rows)
+    return f"[{body}], [{', '.join(names)}]", renumber
+
+
+def normalize(plan: str) -> str:
+    """``plan`` without what depends on the process rather than on the
+    plan: expression ids, plan ids, RDD ids, per-run temp paths and
+    table-name suffixes become placeholders, and every ``Expand`` and
+    the id-ordered lists after it (``Input``/``Keys``/``Results``/
+    ``Output`` and exchange keys) are put in a canonical order
+    (:func:`_canonical_expand`)."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    plan = re.sub(rf"(?:{_TMP}|<tmp>)/[^\s\],]*", "<tmp>", plan)
+    plan = re.sub(r"(spark_catalog\.\w+\.\w+?)_[0-9a-f]{8}\b", r"\1_<id>", plan)
+    lines = plan.split("\n")
+    renumber = None
+    for i, line in enumerate(lines):
+        if re.fullmatch(r"\(\d+\) Expand( .*)?", line) and i + 2 < len(lines):
+            args = lines[i + 2].removeprefix("Arguments: ")
+            lines[i + 2] = "Arguments: " + (canon := _canonical_expand(args))[0]
+            renumber = canon[1]
+        elif renumber is not None:
+            m = _ID_ORDERED.fullmatch(line)
+            if m:
+                line = m[1] + "[" + ", ".join(sorted(_split_top(m[2]))) + "]"
+            elif line.startswith(_HASH):
+                keys = _split_top(line[len(_HASH) :])
+                n, rest = keys.pop().split(")", 1)
+                line = f"{_HASH}{', '.join(sorted(keys))}, {n}){rest}"
+            lines[i] = re.sub(
+                r"(gid#N = )(\d+)\)", lambda g: g[1] + renumber.get(g[2], g[2]) + ")", line
+            )
+    return "\n".join(lines)
 
 
 def main() -> None:
@@ -55,7 +141,7 @@ def main() -> None:
             plan = f"ERROR capturing plan: {e}"
         out = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(out, "w") as f:
-            f.write(plan)
+            f.write(normalize(plan))
         print(f"wrote {out} ({len(plan)} bytes)")
     spark.stop()
 

@@ -40,7 +40,7 @@ def main() -> None:
 
     from udacity_dend_capstone_immigration_spark.session import get_spark_session
     from udacity_dend_capstone_immigration_spark.workload import QUERIES
-    from udacity_dend_capstone_immigration_spark.workload import pretrain as P
+    from udacity_dend_capstone_immigration_spark.operators import cumsum as C
 
     spark = get_spark_session(
         app_name="bpe-extrapolation",
@@ -62,14 +62,14 @@ def main() -> None:
         assert os.path.isdir(d), f"{d} missing — run tools/extrapolate_dedup.py first"
         dirs[s] = d
 
-    shipped_gate = P._BPE_DRIVER_CORPUS_BYTES
+    shipped_gate = C.DRIVER_BYTES
     out: dict = {}
     for scale, sf_dir in sorted(dirs.items()):
         spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1).count()
         res = {"gated": [], "dist": []}
         for _ in range(args.reps):
             for arm, gate in (("gated", shipped_gate), ("dist", -1)):
-                P._BPE_DRIVER_CORPUS_BYTES = gate
+                C.DRIVER_BYTES = gate
                 spark.sparkContext.setJobDescription(
                     f"bpe_encode_corpus x{scale} [{arm}]"
                 )
@@ -78,7 +78,7 @@ def main() -> None:
                     "noop"
                 ).mode("overwrite").save()
                 res[arm].append(round(time.time() - t0, 3))
-        P._BPE_DRIVER_CORPUS_BYTES = shipped_gate
+        C.DRIVER_BYTES = shipped_gate
         est = spark.read.parquet(f"{sf_dir}/documents.parquet")
         est_b = int(est._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         out[f"x{scale}"] = {

@@ -95,6 +95,14 @@ def _cols(order_cols: list[Column | str]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
+#: the one driver gate: an eager step whose input Catalyst estimates at
+#: or below this many bytes collects it once and runs on the driver
+#: (`pretrain._bpe_train`'s vocab loop, the IVF index builds and
+#: appends in `workload.vectors`) instead of launching distributed
+#: rounds, whose fixed per-job cost dominates at that size.
+DRIVER_BYTES = 32 << 20
+
+
 def estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's sizeInBytes estimate for the optimized plan — file
     sizes scaled through projections/filters; no job runs. ``None``

@@ -406,6 +406,40 @@ def cosine_diverse_reps_grouped(
     )
 
 
+def _type_of(src, col: str) -> str:
+    """Spark type string of ``col`` in ``src`` (a DataFrame or a
+    driver-collected ``pyarrow.Table``)."""
+    import pyarrow as pa
+
+    if isinstance(src, pa.Table):
+        from pyspark.sql.pandas.types import from_arrow_type
+
+        return from_arrow_type(src.schema.field(col).type).simpleString()
+    return src.schema[col].dataType.simpleString()
+
+
+def _map_batches(src, fn, schema: str):
+    """``src.mapInPandas(fn, schema)``. When ``src`` is a
+    driver-collected ``pyarrow.Table`` the same per-batch ``fn`` runs
+    in-process over its record batches instead, and the result is a
+    ``pyarrow.Table`` of ``schema``: no job and no Python worker. The
+    kernels below therefore give one answer on either input; the IVF
+    index builds in ``workload.vectors`` pick the input by size."""
+    import pyarrow as pa
+
+    if not isinstance(src, pa.Table):
+        return src.mapInPandas(fn, schema)
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    out = to_arrow_schema(StructType.fromDDL(schema))
+    parts = [
+        pa.Table.from_pandas(pdf, schema=out, preserve_index=False)
+        for pdf in fn(b.to_pandas() for b in src.to_batches())
+    ]
+    return pa.concat_tables(parts) if parts else out.empty_table()
+
+
 #: Driver-collect bound for ANN codebooks (trained centroid sets). A
 #: codebook is DATA, not a relation — every ANN deployment materializes
 #: it (faiss trains then ships the quantizer) — and its row count is
@@ -494,16 +528,14 @@ def assign_nearest_arrow(
                 "emit_second needs >= 2 centroids (the runner-up of a "
                 "1-cell codebook would be the same cell at -inf)"
             )
-    emb_type = df.schema["embedding"].dataType.simpleString()
+    emb_type = _type_of(df, "embedding")
     out_schema = (
         f"{id_col} long, cell long"
         + (f", embedding {emb_type}" if keep_embedding else "")
         + (", cent_sim double" if emit_sim else "")
         + (", second_cell long, second_sim double" if emit_second else "")
         + (", residual array<double>" if emit_residual else "")
-        + "".join(
-            f", {c} {df.schema[c].dataType.simpleString()}" for c in passthrough
-        )
+        + "".join(f", {c} {_type_of(df, c)}" for c in passthrough)
     )
     cb = codebook
 
@@ -566,7 +598,7 @@ def assign_nearest_arrow(
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    return df.mapInPandas(assign, out_schema)
+    return _map_batches(df, assign, out_schema)
 
 
 def pq_reconstruct(
@@ -652,9 +684,7 @@ def pq_encode(
     import pandas as pd
 
     bd = codebooks[0].mat.shape[1]
-    pass_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in passthrough
-    )
+    pass_schema = "".join(f", {c} {_type_of(df, c)}" for c in passthrough)
 
     def encode(batches):
         for pdf in batches:
@@ -674,7 +704,7 @@ def pq_encode(
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    return df.mapInPandas(encode, f"{id_col} long, codes array<long>{pass_schema}")
+    return _map_batches(df, encode, f"{id_col} long, codes array<long>{pass_schema}")
 
 
 def pq_decode_codes(
@@ -763,7 +793,7 @@ def assign_moment_sums_arrow(
 
     # opaque-function column pruning (guide §4.1): only the vectors
     # cross the Python boundary — ids and attributes never ship
-    df = df.select("embedding")
+    df = df.select(["embedding"])
     cbs = list(codebooks)
     sls = list(slices)
 
@@ -823,9 +853,7 @@ def assign_moment_sums_arrow(
                 }
             )
 
-    return df.mapInPandas(
-        moments, "block int, cell long, cnt long, sums array<long>"
-    )
+    return _map_batches(df, moments, "block int, cell long, cnt long, sums array<long>")
 
 
 def sq8_encode(
@@ -856,9 +884,7 @@ def sq8_encode(
     scale = mx - mn
     ok = scale > 0
     safe = np.where(ok, scale, 1.0)
-    pass_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in passthrough
-    )
+    pass_schema = "".join(f", {c} {_type_of(df, c)}" for c in passthrough)
 
     def encode(batches):
         for pdf in batches:
@@ -876,7 +902,7 @@ def sq8_encode(
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    return df.mapInPandas(encode, f"{id_col} long, codes binary{pass_schema}")
+    return _map_batches(df, encode, f"{id_col} long, codes binary{pass_schema}")
 
 
 def sq8_decode_codes(

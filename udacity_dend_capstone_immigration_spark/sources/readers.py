@@ -70,7 +70,8 @@ def local_frame(
     """The one way to turn driver-side rows into a DataFrame.
 
     ``rows`` are positional tuples (``Row`` objects qualify) in
-    ``schema`` order; ``schema`` is a DDL string or a ``StructType``.
+    ``schema`` order, or a ``pyarrow.Table`` already holding them (cast
+    to ``schema``); ``schema`` is a DDL string or a ``StructType``.
     The rows travel as one ``pyarrow.Table``: Spark plans it as a
     ``LocalRelation`` (below ``spark.sql.execution.arrow.
     localRelationThreshold``) or a JVM-side ``LogicalRDD`` above it —
@@ -88,12 +89,15 @@ def local_frame(
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    rows = list(rows)
-    columns = [
-        pa.array([r[i] for r in rows], type=field.type)
-        for i, field in enumerate(arrow_schema)
-    ]
-    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    if isinstance(rows, pa.Table):
+        table = rows.rename_columns(arrow_schema.names).cast(arrow_schema)
+    else:
+        rows = list(rows)
+        columns = [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ]
+        table = pa.Table.from_arrays(columns, schema=arrow_schema)
     return spark.createDataFrame(table, schema)
 
 

@@ -1,9 +1,12 @@
-"""One crash-atomic commit for every persisted-store rewrite.
+"""One crash-atomic commit for every persisted-store append and rewrite.
 
 Every store in this package (ANN vectors, text dedup, chunks, feature
-snapshots) is a directory of plain parquet relations. Appends add files
-in place; every REWRITE (delta fold, compaction, retrain, reindex,
-tombstone purge, revival, retention prune) goes through this module:
+snapshots) is a directory of plain parquet relations. Every direct
+append (vector, dedup and chunk batches) and every REWRITE (delta
+fold, compaction, retrain, reindex, tombstone purge, revival,
+retention prune) goes through this module; an append is a staged
+``add``, so a crash leaves its batch absent or whole. (The delete
+paths' tombstone tables are still appended in place.)
 
 1. :func:`begin` opens a ``_stage_*`` dir inside the store root. Spark
    never lists ``_``-prefixed paths, so a stage is invisible to readers.
@@ -16,7 +19,7 @@ tombstone purge, revival, retention prune) goes through this module:
 
    - ``replace``: the staged path takes the place of the live one;
    - ``add``: staged files move into the live dirs of the same path,
-     so a delta fold stays O(delta);
+     so an append stays O(batch) and a delta fold O(delta);
    - ``drop``: the live path is deleted (deltas, tombstones,
      partitions a purge emptied).
 
@@ -24,8 +27,9 @@ tombstone purge, revival, retention prune) goes through this module:
 already on disk, so a crash anywhere in a commit, or in a recovery, is
 finished by the next call; with no marker on disk it costs one stat.
 Every entry point that reads, appends to or rewrites a store calls it
-first. A reader therefore sees the store before a rewrite or after it,
-never a mix: no rows doubled by a half-done fold, no relation missing
+first. A reader therefore sees the store before a commit or after it,
+never a mix: no rows doubled by a half-done fold or append, no
+partial batch, no relation missing
 between two renames, no deleted rows resurrected.
 
 Only a writer sweeps unmarked stages (in :func:`begin`): a reader that

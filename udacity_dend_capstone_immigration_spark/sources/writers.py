@@ -8,10 +8,16 @@ read). This writer:
 
 - defaults the fact layout to ``(entry_year, entry_month)`` with
   port-level partitioning opt-in (SURVEY.md §7.3 risk 3);
-- guards every partitioned write with a cheap cardinality estimate
+- refuses partitioned writes that would explode the directory count.
+  A write into a path that does not exist yet (a fresh build, a store
+  stage or temp dir) is guarded in the same single pass over its
+  input: it writes, counts the ``col=value`` leaf directories it
+  created through the Hadoop FileSystem API (one glob, no job), and on
+  overflow deletes the path and raises. A write into an existing path
+  cannot be undone that way, so it is estimated first
   (``approx_count_distinct`` over the partition tuple — one map-side
-  sketch pass, no shuffle of data columns) and refuses layouts that
-  would explode the file count;
+  sketch pass over the input, no shuffle of data columns) and refused
+  before any existing file changes;
 - compacts output by hash-repartitioning on the partition columns first,
   so each output directory is written by exactly one task → one file per
   directory instead of ``shuffle.partitions`` files per directory;
@@ -53,20 +59,33 @@ def _write_guarded(
 ) -> None:
     """Shared guarded-write path for the native columnar formats
     (explosion guardrail + per-directory compaction, see module doc)."""
-    writer = df
-    if partition_by:
-        est = estimate_partition_count(df, partition_by)
-        if est > max_partitions:
-            raise PartitionExplosionError(
-                f"partitionBy({list(partition_by)}) would create ~{est} "
-                f"directories (> {max_partitions}); coarsen the layout or "
-                f"raise max_partitions explicitly"
-            )
-        if compact:
-            writer = df.repartition(*[F.col(c) for c in partition_by])
-        writer.write.mode(mode).partitionBy(*partition_by).format(fmt).save(path)
-    else:
-        writer.write.mode(mode).format(fmt).save(path)
+    if not partition_by:
+        df.write.mode(mode).format(fmt).save(path)
+        return
+    # the Hadoop FileSystem API, so the guard holds for any scheme Spark writes to
+    spark = df.sparkSession
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fresh = not fs.exists(jpath)
+    if not fresh:
+        _refuse(partition_by, estimate_partition_count(df, partition_by), max_partitions)
+    writer = df.repartition(*[F.col(c) for c in partition_by]) if compact else df
+    writer.write.mode(mode).partitionBy(*partition_by).format(fmt).save(path)
+    if fresh:
+        leaves = fs.globStatus(jpath.suffix("/" + "/".join(f"{c}=*" for c in partition_by)))
+        n = len(leaves or ())
+        if n > max_partitions:
+            fs.delete(jpath, True)
+        _refuse(partition_by, n, max_partitions)
+
+
+def _refuse(partition_by, n: int, max_partitions: int) -> None:
+    if n > max_partitions:
+        raise PartitionExplosionError(
+            f"partitionBy({list(partition_by)}) makes ~{n} "
+            f"directories (> {max_partitions}); coarsen the layout or "
+            f"raise max_partitions explicitly"
+        )
 
 
 def write_parquet(
@@ -197,12 +216,7 @@ def write_table(
                 "fmt='parquet'"
             )
         if partition_by:
-            est = estimate_partition_count(df, partition_by)
-            if est > max_partitions:
-                raise PartitionExplosionError(
-                    f"partitionBy({list(partition_by)}) would create ~{est} "
-                    f"directories (> {max_partitions})"
-                )
+            _refuse(partition_by, estimate_partition_count(df, partition_by), max_partitions)
             df.write.format("delta").mode(mode).partitionBy(*partition_by).save(path)
         else:
             df.write.format("delta").mode(mode).save(path)

@@ -119,12 +119,14 @@ def append_to_chunk_store(
     (a drifted parameter would silently fork the window grid — meta is
     the single source of truth) and append partitioned rows. No probe
     phase: the relation has no cross-doc aggregate state, so append ≡
-    rebuild by construction."""
-    recover(store_dir)
+    rebuild by construction. The rows land in one staged store commit
+    (``add``): a crash leaves the batch absent or whole."""
+    stage = begin(store_dir)
     size, stride, n_buckets = _read_meta(spark, store_dir)
     ch = chunk_documents(new_docs, "doc_id", "text", size=size, stride=stride)
     ch = ch.withColumn("h_pt", _hex_bucket(F.col("chunk_hash"), n_buckets))
-    write_table(ch, f"{store_dir}/chunks", partition_by=["h_pt"], mode="append")
+    write_table(ch, f"{stage}/chunks", partition_by=["h_pt"])
+    commit(store_dir, stage, add=["chunks"])
 
 
 #: the chunk relation's data columns (h_pt rides as the partition key)

@@ -185,24 +185,26 @@ def append_to_dedup_index(
     STATIC partition filter on the shingle_df probe scan, so a small
     batch reads only its slice of the stats table. Cap-crossing
     shingles land in ``dropped_shingles`` (read-time anti-join; folded
-    physically by :func:`fold_dedup_index`)."""
+    physically by :func:`fold_dedup_index`). Every relation's rows are
+    staged and land in one store commit (``add``), so a crash leaves
+    the batch absent or whole."""
     k, cap, n_buckets = _read_meta(spark, index_dir)
     e_b = shingle_rows(new_docs, "doc_id", "text", k).withColumnRenamed(
         "shingle", "g"
     )
     gb, new_rows, cross = _batch_decisions(spark, e_b, index_dir, cap, n_buckets)
-    write_table(
-        new_rows, f"{index_dir}/shingle_index", partition_by=["g_pt"], mode="append"
-    )
+    stage = begin(index_dir)
+    write_table(new_rows, f"{stage}/shingle_index", partition_by=["g_pt"])
+    rels = ["shingle_index", "shingle_df", "fingerprints", "doc_sizes"]
     # only materialize the tombstone table when a crossing happened —
     # an empty dir would pin a permanent anti-join into serve plans
     if cross.limit(1).count():
-        write_table(cross, f"{index_dir}/dropped_shingles", mode="append")
+        write_table(cross, f"{stage}/dropped_shingles")
+        rels.append("dropped_shingles")
     write_table(
         gb.select("g", F.col("df_b").alias("df"), "g_pt"),
-        f"{index_dir}/shingle_df",
+        f"{stage}/shingle_df",
         partition_by=["g_pt"],
-        mode="append",
     )
     fp_b = (
         new_docs.select(
@@ -210,11 +212,10 @@ def append_to_dedup_index(
         )
         .withColumn("fp_pt", _hex_bucket(F.col("fp"), n_buckets))
     )
-    write_table(
-        fp_b, f"{index_dir}/fingerprints", partition_by=["fp_pt"], mode="append"
-    )
+    write_table(fp_b, f"{stage}/fingerprints", partition_by=["fp_pt"])
     sizes_b = e_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    write_table(sizes_b, f"{index_dir}/doc_sizes", mode="append")
+    write_table(sizes_b, f"{stage}/doc_sizes")
+    commit(index_dir, stage, add=rels)
 
 
 def _batch_decisions(
@@ -995,8 +996,8 @@ def dedup_maintenance_due(index_dir: str, min_delta_batches: int = 4) -> dict:
     recover(index_dir)
     batches = pending(index_dir, DEDUP_DELTA_RELS)
     crossing = [rel for rel, n in batches.items() if n >= min_delta_batches]
-    tomb = os.path.isdir(f"{index_dir}/dropped_shingles") or pending_batches(
-        f"{index_dir}/dropped_shingles_delta"
+    tomb = os.path.isdir(f"{index_dir}/dropped_shingles") or bool(
+        pending_batches(f"{index_dir}/dropped_shingles_delta")
     )
     # doc tombstones (right-to-be-forgotten deletes): the fold applies
     # them physically, so they count toward due exactly like shingle

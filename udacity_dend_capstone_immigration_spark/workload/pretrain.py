@@ -436,17 +436,17 @@ def bpe_apply_merge(words, lft: str, rgt: str):
     return _apply_merges_kernel(words, [(lft, rgt)]).localCheckpoint(eager=False)
 
 
-#: Corpus-estimate ceiling (Catalyst sizeInBytes) below which BPE
-#: training runs DRIVER-SIDE over the collected (term, cnt) vocab
-#: instead of as `_BPE_ROUNDS` distributed jobs. The distributed round
-#: is ~0.4-0.6s of fixed overhead (Arrow kernel spin-up + pair
-#: exchange + argmax collect) regardless of vocab size, so a tiny
-#: vocab pays ~6x that in pure job launches; driver rounds on a ≤32 MiB
-#: corpus (|V| ≲ 60k terms, Heaps) cost milliseconds-to-tenths each.
-#: Past the ceiling the per-round Python loop would grow with |V| while
-#: the distributed rounds stay map-parallel — the same estimate-derived
-#: algorithm pick as `grouped_running_sum` (guide §1.2/§2).
-_BPE_DRIVER_CORPUS_BYTES = 32 << 20
+# At or below the shared driver gate (`operators.cumsum.DRIVER_BYTES`,
+# a Catalyst corpus estimate) BPE training runs DRIVER-SIDE over the
+# collected (term, cnt) vocab instead of as `_BPE_ROUNDS` distributed
+# jobs. The distributed round is ~0.4-0.6s of fixed overhead (Arrow
+# kernel spin-up + pair exchange + argmax collect) regardless of vocab
+# size, so a tiny vocab pays ~6x that in pure job launches; driver
+# rounds on a ≤32 MiB corpus (|V| ≲ 60k terms, Heaps) cost
+# milliseconds-to-tenths each. Past the gate the per-round Python loop
+# would grow with |V| while the distributed rounds stay map-parallel —
+# the same estimate-derived algorithm pick as `grouped_running_sum`
+# (guide §1.2/§2).
 
 #: Hard vocab-row cap for the driver path: if the estimate lied and the
 #: collected vocab is corpus-scaled, fall back to the distributed
@@ -493,7 +493,7 @@ def _bpe_train(spark, docs):
     applying every learned merge in rank order, i.e. the trained
     tokenizer's encoding of the corpus vocabulary).
 
-    Small corpora (Catalyst estimate ≤ `_BPE_DRIVER_CORPUS_BYTES`):
+    Small corpora (Catalyst estimate ≤ `cumsum.DRIVER_BYTES`):
     ONE tokenize+count job collects the vocab and the whole loop runs
     driver-side (`_bpe_train_local` — the bounded eager-decision
     contract; r17, tests/test_pretrain.py pins driver ≡ distributed on
@@ -507,12 +507,13 @@ def _bpe_train(spark, docs):
     vocab-keyed exchanges + 3 sorts per round through the window
     pipeline)."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
+        DRIVER_BYTES,
         estimated_bytes,
     )
     from udacity_dend_capstone_immigration_spark.operators.spread import spread_scan
 
     est = estimated_bytes(docs)
-    if est is not None and est <= _BPE_DRIVER_CORPUS_BYTES:
+    if est is not None and est <= DRIVER_BYTES:
         vocab = (
             spread_scan(docs)
             .select(F.explode(tokenize(F.col("text"))).alias("term"))

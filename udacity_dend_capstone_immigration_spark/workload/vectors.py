@@ -344,9 +344,13 @@ def _ivf_train(emb, n_cells=None):
 
     EAGER: training collects N_CELLS-bounded centroid rows per pass
     (`MAX_CODEBOOK_ROWS` contract — an ANN index build materializes its
-    codebook by definition). Returns (cents_df, codebook): the tiny
+    codebook by definition). A driver-sized ``emb`` (`_driver_input`)
+    trains in-process on one collected table: the same kernel, no
+    job per pass. Returns (cents_df, codebook): the tiny
     local-collection centroid frame for declarative probe joins, and
     the numpy codebook for Arrow assignment."""
+    from pyspark.sql import SparkSession
+
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         Codebook,
         assign_moment_sums_arrow,
@@ -354,12 +358,9 @@ def _ivf_train(emb, n_cells=None):
 
     if n_cells is None:
         n_cells = _IVF_CELLS
-    spark = emb.sparkSession
-    seed_rows = (
-        emb.where(F.col("vec_id") < n_cells)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_emb"))
-        .collect()
-    )
+    spark = SparkSession.active()
+    emb = _driver_input(emb)
+    seed_rows = _seed_rows(emb, n_cells)
     cb = Codebook(seed_rows)
     rows = seed_rows
     dim = len(seed_rows[0][1])
@@ -384,14 +385,77 @@ def _ivf_train(emb, n_cells=None):
     return cents_df, cb
 
 
+def _driver_input(emb):
+    """``emb`` collected once as a ``pyarrow.Table`` when Catalyst
+    estimates it at or below the shared driver gate
+    (`cumsum.DRIVER_BYTES`), else ``emb`` itself. Index training,
+    builds and appends hand either to the same per-batch kernels
+    (`similarity._map_batches`): in-process on a table, as Arrow map
+    stages on a frame. A table passes through unchanged."""
+    import pyarrow as pa
+
+    from udacity_dend_capstone_immigration_spark.operators.cumsum import (
+        DRIVER_BYTES,
+        estimated_bytes,
+    )
+
+    if isinstance(emb, pa.Table) or emb.isStreaming:
+        return emb
+    est = estimated_bytes(emb)
+    return emb.toArrow() if est is not None and est <= DRIVER_BYTES else emb
+
+
+def _as_frame(spark, rows):
+    """A kernel's output as a DataFrame: a driver-side table becomes a
+    local relation (`local_frame`), a frame passes through."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if isinstance(rows, pa.Table):
+        return local_frame(spark, rows, from_arrow_schema(rows.schema))
+    return rows
+
+
+def _seed_rows(emb, n: int) -> list:
+    """(vec_id, embedding) rows with ``vec_id < n`` — the Lloyd seeds —
+    from a frame or a driver-side table."""
+    import pyarrow as pa
+
+    if isinstance(emb, pa.Table):
+        import pyarrow.compute as pc
+
+        seeds = emb.filter(pc.less(emb["vec_id"], n))
+        return list(zip(seeds["vec_id"].to_pylist(), seeds["embedding"].to_pylist()))
+    return emb.where(F.col("vec_id") < n).select("vec_id", "embedding").collect()
+
+
 def _centroid_rows_from_moments(m):
     """Finish quantized centroid means from `assign_moment_sums_arrow`
     partials: Σfloor(v·2^24) (exact, associative) / (N · 2^24) in
     double — the identical arithmetic the old per-row aggregate
     computed — then dim-ordered array reassembly. Input is tiny
-    (batches × cells rows), so the explode/groupBy here is noise.
+    (batches × cells rows), so the explode/groupBy here is noise; a
+    driver-side table of partials finishes in numpy with the same
+    exact int64 sums and the same double division.
     Returns [(block, cent_id, cent_emb)] rows — callers split by the
     leading block value (single-block callers just drop it)."""
+    import pyarrow as pa
+
+    if isinstance(m, pa.Table):
+        import numpy as np
+
+        acc: dict = {}
+        for key, n, sums in zip(
+            zip(m["block"].to_pylist(), m["cell"].to_pylist()),
+            m["cnt"].to_pylist(),
+            m["sums"].to_numpy(zero_copy_only=False),
+        ):
+            cnt, tot = acc.get(key, (0, 0))
+            acc[key] = (cnt + n, tot + np.asarray(sums, dtype=np.int64))
+        return [
+            (b, c, (tot.astype(np.float64) / (float(cnt) * 16777216.0)).tolist())
+            for (b, c), (cnt, tot) in sorted(acc.items())
+        ]
     return list(
         (
             m.select("block", "cell", "cnt", F.posexplode("sums").alias("dim", "s"))
@@ -759,17 +823,15 @@ def _pq_codebooks(emb):
     contract and accumulates exact int64 moment partials), and the
     seeds come from ONE collect sliced locally — 2 jobs total instead
     of the old 8 (per-block seed collect + per-block assign scan with
-    an n×d posexplode aggregate). A/B at sf0.1: 1.94 → ~0.5s."""
+    an n×d posexplode aggregate). A/B at sf0.1: 1.94 → ~0.5s. A
+    driver-sized ``emb`` (`_driver_input`) runs no job at all."""
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         Codebook,
         assign_moment_sums_arrow,
     )
 
-    seed_rows = (
-        emb.where(F.col("vec_id") < _PQ_CODES)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .collect()
-    )
+    emb = _driver_input(emb)
+    seed_rows = _seed_rows(emb, _PQ_CODES)
     seed_cbs = [
         Codebook(
             [(r[0], r[1][j * _PQ_DIM : (j + 1) * _PQ_DIM]) for r in seed_rows]
@@ -1119,7 +1181,10 @@ def build_ivfpq_index(spark, sf_dir, out_dir: str, emb=None, residual: bool = Fa
     of the same assignment scan via ``emit_residual``, the PQ books
     train on the checkpointed residual frame exactly as
     `_residual_frame` does, and decode adds the persisted centroid
-    back). Returns ``out_dir``."""
+    back). A driver-sized input (`_driver_input`) is collected once and
+    trained, assigned and encoded in-process. Returns ``out_dir``."""
+    import pyarrow as pa
+
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         assign_nearest_arrow,
         pq_encode,
@@ -1128,20 +1193,25 @@ def build_ivfpq_index(spark, sf_dir, out_dir: str, emb=None, residual: bool = Fa
 
     if emb is None:
         emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents, cb = _ivf_train(emb)
+    src = _driver_input(emb)
+    cents, cb = _ivf_train(src)
     if residual:
-        assigned = assign_nearest_arrow(emb, cb, "vec_id", emit_residual=True)
-        frame = (
-            assigned.join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
-            .select("vec_id", F.col("residual").alias("embedding"), "cell")
-            # PQ training re-reads the frame 2x per block
-            .localCheckpoint(eager=True)
-        )
-        pq_cbs = _pq_codebooks(frame.select("vec_id", "embedding"))
+        assigned = assign_nearest_arrow(src, cb, "vec_id", emit_residual=True)
+        if isinstance(assigned, pa.Table):
+            frame = assigned.select(["vec_id", "residual", "cell"]).rename_columns(
+                ["vec_id", "embedding", "cell"]
+            )
+        else:
+            frame = (
+                assigned.select("vec_id", F.col("residual").alias("embedding"), "cell")
+                # PQ training re-reads the frame 2x per block
+                .localCheckpoint(eager=True)
+            )
+        pq_cbs = _pq_codebooks(frame.select(["vec_id", "embedding"]))
         codes = pq_encode(frame, pq_cbs, passthrough=("cell",))
     else:
-        pq_cbs = _pq_codebooks(emb)
-        assigned = assign_nearest_arrow(emb, cb, "vec_id", keep_embedding=True)
+        pq_cbs = _pq_codebooks(src)
+        assigned = assign_nearest_arrow(src, cb, "vec_id", keep_embedding=True)
         codes = pq_encode(assigned, pq_cbs, passthrough=("cell",))
     write_table(cents, f"{out_dir}/ivf_centroids")
     books = local_frame(
@@ -1158,7 +1228,7 @@ def build_ivfpq_index(spark, sf_dir, out_dir: str, emb=None, residual: bool = Fa
     # keeps its exact long type on read-back (partition-value inference
     # would re-type it) while the layout still prunes by cell
     write_table(
-        codes.withColumn("cell_pt", F.col("cell")),
+        _as_frame(spark, codes).withColumn("cell_pt", F.col("cell")),
         f"{out_dir}/pq_codes",
         partition_by=["cell_pt"],
     )
@@ -1182,8 +1252,9 @@ def _frozen_encoder(spark, index_dir: str, store: str):
     (vec_id, embedding) batch to ``store``'s rows (with ``cell_pt``),
     assigned against the read-back FROZEN coarse centroids and, for SQ8
     and PQ, encoded against the frozen affine stats or block codebooks
-    — one chained Arrow scan over the batch. Direct and streamed
-    appends both encode through it."""
+    — one chained Arrow scan over the batch, or in-process on the
+    collected batch when it is driver-sized (`_driver_input`). Direct
+    and streamed appends both encode through it."""
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         Codebook,
         assign_nearest_arrow,
@@ -1201,21 +1272,25 @@ def _frozen_encoder(spark, index_dir: str, store: str):
         books = load_pq_codebooks(spark, f"{index_dir}/pq_codebooks")
 
     def encode(emb):
-        rows = assign_nearest_arrow(emb, cb, "vec_id", keep_embedding=True)
+        rows = assign_nearest_arrow(_driver_input(emb), cb, "vec_id", keep_embedding=True)
         if stats is not None:
             rows = sq8_encode(rows, *stats, passthrough=("cell",))
         elif books is not None:
             rows = pq_encode(rows, books, passthrough=("cell",))
-        return rows.withColumn("cell_pt", F.col("cell"))
+        return _as_frame(spark, rows).withColumn("cell_pt", F.col("cell"))
 
     return encode
 
 
 def _append_direct(spark, new_emb, index_dir: str, store: str) -> None:
+    """Encode ``new_emb`` and land it in ``store`` as one staged store
+    commit (``add``): a crash leaves the batch absent or whole."""
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
     rows = _frozen_encoder(spark, index_dir, store)(new_emb)
-    write_table(rows, f"{index_dir}/{store}", partition_by=["cell_pt"], mode="append")
+    stage = begin(index_dir)
+    write_table(rows, f"{stage}/{store}", partition_by=["cell_pt"])
+    commit(index_dir, stage, add=[store])
 
 
 def load_pq_codebooks(spark, path: str) -> list:
@@ -1245,7 +1320,9 @@ def build_ivf_flat_index(spark, sf_dir, out_dir: str, emb=None, attrs: tuple = (
     BESIDE each vector (they ride the assignment scan via passthrough —
     no corpus re-join): the filtered-search layout, where a serve-time
     predicate pushes down to the routed store scan instead of joining
-    an attribute table per query batch. Returns ``out_dir``."""
+    an attribute table per query batch. A driver-sized input
+    (`_driver_input`) is collected once and trained and assigned
+    in-process. Returns ``out_dir``."""
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         assign_nearest_arrow,
     )
@@ -1255,13 +1332,14 @@ def build_ivf_flat_index(spark, sf_dir, out_dir: str, emb=None, attrs: tuple = (
         emb = table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding", *attrs
         )
-    cents, cb = _ivf_train(emb.select("vec_id", "embedding"))
+    src = _driver_input(emb)
+    cents, cb = _ivf_train(src.select(["vec_id", "embedding"]))
     assigned = assign_nearest_arrow(
-        emb, cb, "vec_id", keep_embedding=True, passthrough=attrs
+        src, cb, "vec_id", keep_embedding=True, passthrough=attrs
     )
     write_table(cents, f"{out_dir}/ivf_centroids")
     write_table(
-        assigned.withColumn("cell_pt", F.col("cell")),
+        _as_frame(spark, assigned).withColumn("cell_pt", F.col("cell")),
         f"{out_dir}/ivf_vectors",
         partition_by=["cell_pt"],
     )
@@ -1324,7 +1402,9 @@ def build_ivf_sq8_index(spark, sf_dir, out_dir: str, emb=None) -> str:
     == the uncompressed flat layout on this corpus (`ann_sq8_recall`
     0.92/0.96) — there is no loss left for the residual transform to
     recover, and it would add a centroid join to the decode for
-    nothing."""
+    nothing. A driver-sized input (`_driver_input`) is trained,
+    assigned and encoded in-process; the per-dim stats stay one
+    JVM-side aggregate."""
     from udacity_dend_capstone_immigration_spark.operators.similarity import (
         assign_nearest_arrow,
         sq8_encode,
@@ -1333,9 +1413,10 @@ def build_ivf_sq8_index(spark, sf_dir, out_dir: str, emb=None) -> str:
 
     if emb is None:
         emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents, cb = _ivf_train(emb)
+    src = _driver_input(emb)
+    cents, cb = _ivf_train(src)
     srows, mn, mx = _sq8_corpus_stats(emb)
-    assigned = assign_nearest_arrow(emb, cb, "vec_id", keep_embedding=True)
+    assigned = assign_nearest_arrow(src, cb, "vec_id", keep_embedding=True)
     codes = sq8_encode(assigned, mn, mx, passthrough=("cell",))
     write_table(cents, f"{out_dir}/ivf_centroids")
     stats = local_frame(
@@ -1345,7 +1426,7 @@ def build_ivf_sq8_index(spark, sf_dir, out_dir: str, emb=None) -> str:
     )
     write_table(stats, f"{out_dir}/sq8_stats")
     write_table(
-        codes.withColumn("cell_pt", F.col("cell")),
+        _as_frame(spark, codes).withColumn("cell_pt", F.col("cell")),
         f"{out_dir}/sq8_codes",
         partition_by=["cell_pt"],
     )
