@@ -76,25 +76,71 @@ def _canonical_expand(args: str) -> tuple[str, dict]:
     return f"[{body}], [{', '.join(names)}]", renumber
 
 
+#: a line of the operator tree: ``+- Name (id)`` (or the root ``Name (id)``)
+_TREE = re.compile(r"([ :|]*)([+:]- )?(?:\* )?([A-Za-z][^()]*?) \((\d+)\)")
+#: operators of the aggregate chain Spark's multi-distinct rewrite puts
+#: above its ``Expand`` (the partial/final aggregates and their exchanges)
+_AGG_CHAIN = ("HashAggregate", "ObjectHashAggregate", "SortAggregate", "Exchange", "AQEShuffleRead")
+
+
+def _expand_chains(lines: list[str]) -> dict[str, str]:
+    """{operator id: id of the ``Expand`` below it} for every operator
+    of an ``Expand``'s aggregate chain (:data:`_AGG_CHAIN`), read off
+    the operator tree: the operators whose lists follow that Expand's
+    column order. Other operators, ancestors above the chain included,
+    keep their lists as they are."""
+    parent: dict[str, str] = {}
+    name: dict[str, str] = {}
+    stack: list[str] = []
+    for i, line in enumerate(lines):
+        m = _TREE.fullmatch(line)
+        if not m:
+            continue
+        if m[2]:
+            depth = len(m[1]) // 3 + 1
+        elif i + 1 < len(lines) and re.match(r"[ :|]*[+:]- ", lines[i + 1]):
+            depth = 0  # a tree's root line
+        else:
+            continue
+        del stack[depth:]
+        if stack:
+            parent[m[4]] = stack[-1]
+        stack.append(m[4])
+        name[m[4]] = m[3].split(" ")[0]
+    chains = {}
+    for op, n in name.items():
+        if n == "Expand":
+            up = parent.get(op)
+            while up is not None and name[up] in _AGG_CHAIN:
+                chains[up] = op
+                up = parent.get(up)
+    return chains
+
+
 def normalize(plan: str) -> str:
     """``plan`` without what depends on the process rather than on the
     plan: expression ids, plan ids, RDD ids, per-run temp paths and
     table-name suffixes become placeholders, and every ``Expand`` and
-    the id-ordered lists after it (``Input``/``Keys``/``Results``/
-    ``Output`` and exchange keys) are put in a canonical order
-    (:func:`_canonical_expand`)."""
+    the id-ordered lists of its aggregate chain (``Input``/``Keys``/
+    ``Results``/``Output`` and exchange keys, :func:`_expand_chains`)
+    are put in a canonical order (:func:`_canonical_expand`)."""
     plan = re.sub(r"#\d+", "#N", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
     plan = re.sub(rf"(?:{_TMP}|<tmp>)/[^\s\],]*", "<tmp>", plan)
     plan = re.sub(r"(spark_catalog\.\w+\.\w+?)_[0-9a-f]{8}\b", r"\1_<id>", plan)
     lines = plan.split("\n")
+    chains = _expand_chains(lines)
+    heads = [re.fullmatch(r"\((\d+)\) (\w+).*", line) for line in lines]
+    renumbers: dict[str, dict] = {}
+    for i, head in enumerate(heads):
+        if head and head[2] == "Expand" and i + 2 < len(lines):
+            args, renumbers[head[1]] = _canonical_expand(lines[i + 2].removeprefix("Arguments: "))
+            lines[i + 2] = "Arguments: " + args
     renumber = None
-    for i, line in enumerate(lines):
-        if re.fullmatch(r"\(\d+\) Expand( .*)?", line) and i + 2 < len(lines):
-            args = lines[i + 2].removeprefix("Arguments: ")
-            lines[i + 2] = "Arguments: " + (canon := _canonical_expand(args))[0]
-            renumber = canon[1]
+    for i, (line, head) in enumerate(zip(lines, heads)):
+        if head:
+            renumber = renumbers.get(chains.get(head[1], ""))
         elif renumber is not None:
             m = _ID_ORDERED.fullmatch(line)
             if m:
@@ -134,14 +180,16 @@ def main() -> None:
     for name in names:
         try:
             df = QUERIES[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            plan = normalize(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             )
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR capturing plan: {e}"
         out = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(out, "w") as f:
-            f.write(normalize(plan))
+            f.write(plan)
         print(f"wrote {out} ({len(plan)} bytes)")
     spark.stop()
 

@@ -65,16 +65,17 @@ def read_csv_with_schema(
 def local_frame(
     spark: SparkSession,
     rows: Iterable[Sequence],
-    schema: str | StructType,
+    schema: str | StructType | None = None,
 ) -> DataFrame:
     """The one way to turn driver-side rows into a DataFrame.
 
     ``rows`` are positional tuples (``Row`` objects qualify) in
-    ``schema`` order, or a ``pyarrow.Table`` already holding them (cast
-    to ``schema``); ``schema`` is a DDL string or a ``StructType``.
-    The rows travel as one ``pyarrow.Table``: Spark plans it as a
-    ``LocalRelation`` (below ``spark.sql.execution.arrow.
-    localRelationThreshold``) or a JVM-side ``LogicalRDD`` above it —
+    ``schema`` order; ``schema`` is a DDL string or a ``StructType``.
+    A ``pyarrow.Table`` enters as it is, with its own schema (no
+    ``schema`` needed). The rows travel as one ``pyarrow.Table``:
+    Spark plans it as a ``LocalRelation`` (below ``spark.sql.
+    execution.arrow.localRelationThreshold``) or a JVM-side
+    ``LogicalRDD`` above it —
     never the pickled Python RDD that ``createDataFrame(<list>)``
     builds, whose every scan (each broadcast of a 5-row dim included)
     runs a job through a Python worker. A ``LocalRelation`` also
@@ -86,18 +87,17 @@ def local_frame(
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows)
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    if isinstance(rows, pa.Table):
-        table = rows.rename_columns(arrow_schema.names).cast(arrow_schema)
-    else:
-        rows = list(rows)
-        columns = [
-            pa.array([r[i] for r in rows], type=field.type)
-            for i, field in enumerate(arrow_schema)
-        ]
-        table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    rows = list(rows)
+    columns = [
+        pa.array([r[i] for r in rows], type=field.type)
+        for i, field in enumerate(arrow_schema)
+    ]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
     return spark.createDataFrame(table, schema)
 
 

@@ -13,8 +13,13 @@ read). This writer:
   stage or temp dir) is guarded in the same single pass over its
   input: it writes, counts the ``col=value`` leaf directories it
   created through the Hadoop FileSystem API (one glob, no job), and on
-  overflow deletes the path and raises. A write into an existing path
-  cannot be undone that way, so it is estimated first
+  overflow deletes the path and raises. This holds for every fresh
+  path, pipeline outputs (``write_parquet``/``write_table``, e.g. the
+  opt-in port-level fact layout) included, so a refused layout costs
+  its whole write (every one of its directories) plus a recursive
+  delete, not one sketch pass; a write that passes (the usual case)
+  makes one pass over its input instead of two. A write into an
+  existing path cannot be undone that way, so it is estimated first
   (``approx_count_distinct`` over the partition tuple — one map-side
   sketch pass over the input, no shuffle of data columns) and refused
   before any existing file changes;

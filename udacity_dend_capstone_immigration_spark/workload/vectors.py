@@ -409,69 +409,47 @@ def _as_frame(spark, rows):
     """A kernel's output as a DataFrame: a driver-side table becomes a
     local relation (`local_frame`), a frame passes through."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
 
-    if isinstance(rows, pa.Table):
-        return local_frame(spark, rows, from_arrow_schema(rows.schema))
-    return rows
+    return local_frame(spark, rows) if isinstance(rows, pa.Table) else rows
 
 
 def _seed_rows(emb, n: int) -> list:
     """(vec_id, embedding) rows with ``vec_id < n`` — the Lloyd seeds —
     from a frame or a driver-side table."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    if isinstance(emb, pa.Table):
-        import pyarrow.compute as pc
-
-        seeds = emb.filter(pc.less(emb["vec_id"], n))
-        return list(zip(seeds["vec_id"].to_pylist(), seeds["embedding"].to_pylist()))
-    return emb.where(F.col("vec_id") < n).select("vec_id", "embedding").collect()
+    if not isinstance(emb, pa.Table):
+        emb = emb.where(F.col("vec_id") < n).select("vec_id", "embedding").toArrow()
+    seeds = emb.filter(pc.less(emb["vec_id"], n))
+    return list(zip(seeds["vec_id"].to_pylist(), seeds["embedding"].to_pylist()))
 
 
 def _centroid_rows_from_moments(m):
     """Finish quantized centroid means from `assign_moment_sums_arrow`
-    partials: Σfloor(v·2^24) (exact, associative) / (N · 2^24) in
-    double — the identical arithmetic the old per-row aggregate
-    computed — then dim-ordered array reassembly. Input is tiny
-    (batches × cells rows), so the explode/groupBy here is noise; a
-    driver-side table of partials finishes in numpy with the same
-    exact int64 sums and the same double division.
+    partials: Σfloor(v·2^24) (exact int64, associative) / (N · 2^24)
+    in double — the identical arithmetic the old per-row aggregate
+    computed. Input is tiny (batches × cells rows), so a frame of
+    partials is collected and finishes on the driver like a table.
     Returns [(block, cent_id, cent_emb)] rows — callers split by the
     leading block value (single-block callers just drop it)."""
+    import numpy as np
     import pyarrow as pa
 
-    if isinstance(m, pa.Table):
-        import numpy as np
-
-        acc: dict = {}
-        for key, n, sums in zip(
-            zip(m["block"].to_pylist(), m["cell"].to_pylist()),
-            m["cnt"].to_pylist(),
-            m["sums"].to_numpy(zero_copy_only=False),
-        ):
-            cnt, tot = acc.get(key, (0, 0))
-            acc[key] = (cnt + n, tot + np.asarray(sums, dtype=np.int64))
-        return [
-            (b, c, (tot.astype(np.float64) / (float(cnt) * 16777216.0)).tolist())
-            for (b, c), (cnt, tot) in sorted(acc.items())
-        ]
-    return list(
-        (
-            m.select("block", "cell", "cnt", F.posexplode("sums").alias("dim", "s"))
-            .groupBy("block", "cell", "dim")
-            .agg(
-                (
-                    F.sum("s").cast("double")
-                    / (F.sum("cnt").cast("double") * F.lit(16777216.0))
-                ).alias("val")
-            )
-            .groupBy("block", "cell")
-            .agg(F.sort_array(F.collect_list(F.struct("dim", "val"))).alias("dv"))
-            .select("block", F.col("cell").alias("cent_id"), F.col("dv.val").alias("cent_emb"))
-            .collect()
-        )
-    )
+    if not isinstance(m, pa.Table):
+        m = m.toArrow()
+    acc: dict = {}
+    for key, n, sums in zip(
+        zip(m["block"].to_pylist(), m["cell"].to_pylist()),
+        m["cnt"].to_pylist(),
+        m["sums"].to_numpy(zero_copy_only=False),
+    ):
+        cnt, tot = acc.get(key, (0, 0))
+        acc[key] = (cnt + n, tot + np.asarray(sums, dtype=np.int64))
+    return [
+        (b, c, (tot.astype(np.float64) / (float(cnt) * 16777216.0)).tolist())
+        for (b, c), (cnt, tot) in sorted(acc.items())
+    ]
 
 
 @query(
