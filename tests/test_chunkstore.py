@@ -188,6 +188,27 @@ def test_tombstone_fold_crash_keeps_survivors(spark):
     )
 
 
+def test_delete_crash_leaves_delete_absent_or_whole(spark):
+    """A delete is one staged store commit: crashed at every mutation
+    it makes, the store serves the delete absent or whole."""
+    import tempfile
+
+    from tests.fixtures.crash import crash_matrix
+    from udacity_dend_capstone_immigration_spark.workload import chunkstore as C
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(40)
+    store = C.build_chunk_store(
+        spark, docs, tempfile.mkdtemp(prefix="chunk_store_delcrash_t_")
+    )
+    dead = docs.select("doc_id").orderBy("doc_id").limit(3)
+    n = crash_matrix(
+        store,
+        lambda d: C.delete_docs_from_chunk_store(spark, d, dead),
+        lambda d: _served_chunks(spark, d),
+    )
+    assert n >= 1  # an in-place append makes no counted mutation
+
+
 @pytest.mark.slow
 def test_every_chunk_store_rewrite_survives_a_crash_at_every_step(spark, tmp_path):
     """Delta fold and tombstone fold, each crashed once before its marker

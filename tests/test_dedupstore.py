@@ -292,6 +292,7 @@ def test_dedup_maintenance_policy(spark, tmp_path):
 # revive idempotence under a crash re-run, and the fold's physical
 # delete application.
 
+from udacity_dend_capstone_immigration_spark.sources.store import tombstoned  # noqa: E402
 from udacity_dend_capstone_immigration_spark.workload.dedupstore import (  # noqa: E402
     delete_from_dedup_index,
     revive_shingles,
@@ -419,6 +420,32 @@ def test_fold_applies_deletes_physically(spark, tmp_path):
         r["cid"] for r in spark.read.parquet(f"{d}/fingerprints").collect()
     }
     assert raw_fp_cids == {1, 2, 3}
+
+
+def test_delete_crash_leaves_delete_absent_or_whole(spark, tmp_path):
+    """A delete stages its negative stats, revival and doc tombstones
+    and lands them in one commit: crashed at its first, second, middle
+    and last mutation, the store serves the delete absent or whole,
+    never stats retracted for a doc that is still served."""
+    from tests.fixtures.crash import crash_matrix, spread_points
+
+    d = str(tmp_path / "idx")
+    build_dedup_index(spark, _docs(spark, _DEL_CORPUS), d, cap=3)
+    dead = _docs(spark, [r for r in _DEL_CORPUS if r[0] in (4, 5)])
+
+    def state(x):
+        served = _served_state(spark, x)  # recovers first
+        due = tombstoned(x, "revival_due") and sorted(
+            r["g"] for r in spark.read.parquet(f"{x}/revival_due").collect()
+        )
+        return served, due
+
+    def op(x):
+        delete_from_dedup_index(spark, dead, x)
+
+    points = spread_points(d, op)
+    crash_matrix(d, op, state, points=points)
+    assert points[-1] >= 1  # an in-place append makes no counted mutation
 
 
 @pytest.mark.slow

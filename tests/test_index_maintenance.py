@@ -309,6 +309,28 @@ def test_direct_append_crash_leaves_batch_absent_or_whole(spark):
     assert len(_served(spark, whole)) == emb.count()
 
 
+def test_delete_crash_leaves_delete_absent_or_whole(spark):
+    """A delete is one staged store commit: crashed at every mutation
+    it makes, the flat store serves the delete absent or whole, and a
+    re-run lands it whole."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    idx = V.build_ivf_flat_index(
+        spark, SF_DIR, tempfile.mkdtemp(prefix="ivfflat_delcrash_t_"), emb=emb
+    )
+    dead = emb.where(F.col("vec_id") % 5 == 2).select("vec_id")
+    n = crash_matrix(
+        idx,
+        lambda d: V.delete_from_index(spark, d, dead),
+        lambda d: _served(spark, d),
+        rerun=True,
+    )
+    # an in-place append makes no counted mutation, so the matrix
+    # above would prove nothing
+    assert n >= 1
+
+
 @pytest.mark.slow
 def test_every_vector_store_rewrite_survives_a_crash_at_every_step(spark):
     """Delta fold, full and bounded compaction, retrain and SQ8 reindex,

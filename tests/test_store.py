@@ -179,3 +179,41 @@ def test_pending_batches(tmp_path):
     for name in ("batch_pt=a-0", "batch_pt=a-1", "_SUCCESS"):
         (d / name).mkdir(parents=True)
     assert store.pending_batches(str(d)) == 2
+
+
+def test_store_modules_never_append_into_a_live_dir():
+    """Source guard: a module that uses the store tier writes through a
+    stage and a commit, never with Spark's in-place append (no
+    ``mode="append"`` keyword, no ``.mode("append")`` call)."""
+    import ast
+    from pathlib import Path
+
+    import udacity_dend_capstone_immigration_spark as pkg
+
+    def is_append(node):
+        return isinstance(node, ast.Constant) and node.value == "append"
+
+    root = Path(pkg.__file__).resolve().parent
+    scanned, offenders = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        if rel != "sources/store.py" and not any(
+            isinstance(n, ast.ImportFrom) and n.module == f"{pkg.__name__}.sources.store"
+            for n in ast.walk(tree)
+        ):
+            continue
+        scanned.add(rel)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            kw = any(k.arg == "mode" and is_append(k.value) for k in node.keywords)
+            call = (
+                isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mode"
+                and any(is_append(a) for a in node.args)
+            )
+            if kw or call:
+                offenders.append(f"{rel}:{node.lineno}")
+    assert {f"workload/{m}.py" for m in ("vectors", "chunkstore", "dedupstore")} <= scanned
+    assert not offenders, offenders

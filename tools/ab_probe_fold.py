@@ -48,10 +48,11 @@ def main() -> None:
         served_index_dir,
     )
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="ab-probe-fold",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "8g",

@@ -40,8 +40,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
-        app_name="ab-statestore", master="local[32]", shuffle_partitions=32,
+        app_name="ab-statestore", master=f"local[{cpus}]", shuffle_partitions=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false",
                     "spark.driver.memory": "8g"},
     )

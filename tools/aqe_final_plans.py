@@ -30,16 +30,17 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if args.default_session:
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master("local[32]").getOrCreate()
+        spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
     else:
         from udacity_dend_capstone_immigration_spark.session import get_spark_session
 
         spark = get_spark_session(
-            app_name="aqe-final-plans", master="local[32]",
-            shuffle_partitions=32,
+            app_name="aqe-final-plans", master=f"local[{cpus}]",
+            shuffle_partitions=cpus,
             extra_conf={"spark.ui.showConsoleProgress": "false",
                         "spark.driver.memory": "8g"},
         )

@@ -42,10 +42,11 @@ def main() -> None:
     from udacity_dend_capstone_immigration_spark.workload import QUERIES
     from udacity_dend_capstone_immigration_spark.operators import cumsum as C
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="bpe-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "64g",

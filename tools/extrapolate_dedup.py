@@ -122,10 +122,11 @@ def main() -> None:
     rng = np.random.default_rng(42)
     lengths = real_token_lengths()
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="dedup-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             # the per-round bench runs in the default 1g local heap; a

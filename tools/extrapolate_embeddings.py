@@ -110,10 +110,11 @@ def main() -> None:
     rng = np.random.default_rng(42)
     base, labels = real_matrix()
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="embeddings-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "64g",

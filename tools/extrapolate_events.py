@@ -100,10 +100,11 @@ def main() -> None:
     from udacity_dend_capstone_immigration_spark.workload import QUERIES
 
     rng = np.random.default_rng(42)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="events-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "64g",

@@ -45,10 +45,11 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=2)
     args = ap.parse_args()
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="featurestore-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "16g",

@@ -87,10 +87,11 @@ def main() -> None:
     from udacity_dend_capstone_immigration_spark.session import get_spark_session
     from udacity_dend_capstone_immigration_spark.workload import QUERIES
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark_session(
         app_name="versiondiff-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.driver.memory": "16g",

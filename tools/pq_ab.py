@@ -50,7 +50,8 @@ def cosine_keep(spark, sf_dir) -> float:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark_session(master="local[8]", shuffle_partitions=8)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark_session(master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     layouts = [(4, 16), (8, 16), (8, 256), (16, 256)]
     for blocks, codes in layouts:

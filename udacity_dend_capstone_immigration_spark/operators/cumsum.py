@@ -102,6 +102,12 @@ def _cols(order_cols: list[Column | str]) -> list[Column]:
 #: rounds, whose fixed per-job cost dominates at that size.
 DRIVER_BYTES = 32 << 20
 
+#: the per-partition size target: a scale-adaptive partition count is
+#: one partition per this many estimated bytes (`pretrain`'s vocab
+#: checkpoint, `streaming.windows.stream_state_partitions`). Equal to
+#: DRIVER_BYTES today, but a separate decision.
+PARTITION_BYTES = 32 << 20
+
 
 def estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's sizeInBytes estimate for the optimized plan — file

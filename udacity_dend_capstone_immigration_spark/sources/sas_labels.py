@@ -35,8 +35,3 @@ def parse_sas_labels(file_text: str, label_name: str) -> list[tuple[str, str]]:
         pairs.append((code, value))
     return pairs
 
-
-def parse_sas_labels_file(path: str, label_name: str) -> list[tuple[str, str]]:
-    """File-path convenience wrapper over :func:`parse_sas_labels`."""
-    with open(path) as f:
-        return parse_sas_labels(f.read(), label_name)

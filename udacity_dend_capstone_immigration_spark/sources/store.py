@@ -4,9 +4,9 @@ Every store in this package (ANN vectors, text dedup, chunks, feature
 snapshots) is a directory of plain parquet relations. Every direct
 append (vector, dedup and chunk batches) and every REWRITE (delta
 fold, compaction, retrain, reindex, tombstone purge, revival,
-retention prune) goes through this module; an append is a staged
-``add``, so a crash leaves its batch absent or whole. (The delete
-paths' tombstone tables are still appended in place.)
+retention prune) goes through this module; an append or a delete is
+a staged ``add``, so a crash leaves its batch absent or whole. No store
+path writes into a live dir.
 
 1. :func:`begin` opens a ``_stage_*`` dir inside the store root. Spark
    never lists ``_``-prefixed paths, so a stage is invisible to readers.
@@ -60,6 +60,22 @@ main relation ``{rel}`` (:func:`stream_to_delta`,
   into the live partition dirs (``add``) and deletes the delta
   (``drop``), so a fold costs O(delta). :func:`pending` counts the
   batches a maintenance policy weighs.
+
+Tombstones
+----------
+A delete lands its keys in a tombstone relation (``deleted_ids``,
+``deleted_docs``, ``dropped_shingles``; the dedup store's
+``revival_due`` list is read the same way) as one staged ``add``; the
+store's rows stay until a maintenance rewrite drops them together with
+the tombstones. A streamed batch may land tombstones in the relation's
+delta, so the main dir can be absent while tombstones are pending.
+
+- :func:`tombstoned` is the one existence test: the main dir exists or
+  a delta batch is pending. Policies and readers ask it, nothing else.
+- :func:`tombstones` reads the keys of main ∪ pending delta.
+- :func:`drop_tombstoned` anti-joins them out of a frame. With no
+  tombstone it returns the frame itself, so serve plans carry no join
+  until a delete lands.
 """
 
 from __future__ import annotations
@@ -78,6 +94,41 @@ def pending_batches(delta_dir: str) -> int:
     if not os.path.isdir(delta_dir):
         return 0
     return sum(1 for e in os.listdir(delta_dir) if e.startswith("batch_pt="))
+
+
+def tombstoned(root: str, rel: str) -> bool:
+    """Whether ``rel`` holds tombstones: its main dir exists or a
+    ``{rel}_delta`` batch is pending."""
+    return os.path.isdir(f"{root}/{rel}") or pending_batches(f"{root}/{rel}_delta") > 0
+
+
+def tombstones(spark, root: str, rel: str, key: str, on: str | None = None):
+    """The ``key`` column (named ``on``) of the tombstones in ``rel``:
+    main ∪ pending delta, either of which may be absent. Only call it
+    when :func:`tombstoned` is true."""
+    from pyspark.sql import functions as F
+
+    from udacity_dend_capstone_immigration_spark.workload.base import read_parquet_memo
+
+    col = F.col(key) if on in (None, key) else F.col(key).alias(on)
+    main = f"{root}/{rel}"
+    paths = [main] if os.path.isdir(main) else []
+    if pending_batches(f"{root}/{rel}_delta"):
+        paths.append(f"{root}/{rel}_delta")
+    dead = read_parquet_memo(spark, paths[0]).select(col)
+    for p in paths[1:]:
+        dead = dead.unionByName(read_parquet_memo(spark, p).select(col))
+    return dead
+
+
+def drop_tombstoned(spark, df, root: str, rel: str, key: str, on: str | None = None):
+    """``df`` less the rows whose ``on`` column (default ``key``)
+    matches a tombstone's ``key`` in ``rel``; ``df`` itself when
+    ``rel`` holds none."""
+    if not tombstoned(root, rel):
+        return df
+    on = on or key
+    return df.join(tombstones(spark, root, rel, key, on), on, "left_anti")
 
 
 def begin(root: str) -> str:

@@ -202,16 +202,15 @@ def write_table(
     path: str,
     fmt: str = "parquet",
     partition_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
     max_partitions: int = DEFAULT_MAX_PARTITIONS,
 ) -> None:
-    """Format-dispatching sink: ``parquet`` / ``orc`` (always available)
-    or ``delta`` (requires the delta-spark package; raises ImportError
-    with guidance when absent — BASELINE.json names Parquet/Delta as the
-    sink pair, and the delta path is the same writer call with
-    ACID/OPTIMIZE semantics layered by the format)."""
+    """Format-dispatching overwrite of ``path``: ``parquet`` / ``orc``
+    (always available) or ``delta`` (requires the delta-spark package;
+    raises ImportError with guidance when absent — BASELINE.json names
+    Parquet/Delta as the sink pair, and the delta path is the same
+    writer call with ACID/OPTIMIZE semantics layered by the format)."""
     if fmt in ("parquet", "orc"):
-        _write_guarded(df, path, fmt, partition_by, mode, max_partitions, compact=True)
+        _write_guarded(df, path, fmt, partition_by, "overwrite", max_partitions, compact=True)
         return
     if fmt == "delta":
         if not delta_available():
@@ -222,9 +221,9 @@ def write_table(
             )
         if partition_by:
             _refuse(partition_by, estimate_partition_count(df, partition_by), max_partitions)
-            df.write.format("delta").mode(mode).partitionBy(*partition_by).save(path)
+            df.write.format("delta").mode("overwrite").partitionBy(*partition_by).save(path)
         else:
-            df.write.format("delta").mode(mode).save(path)
+            df.write.format("delta").mode("overwrite").save(path)
         return
     raise ValueError(f"unsupported sink format: {fmt!r}")
 

@@ -151,7 +151,9 @@ def stream_state_partitions(spark: SparkSession, est_bytes: int | None) -> int |
         return None
     conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = max(1, -(-spark.sparkContext.defaultParallelism // 4))
-    by_size = int(est_bytes) // (32 << 20) + 1
+    from udacity_dend_capstone_immigration_spark.operators.cumsum import PARTITION_BYTES
+
+    by_size = int(est_bytes) // PARTITION_BYTES + 1
     return max(1, min(conf_n, max(floor, by_size)))
 
 

@@ -120,16 +120,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def events_ts_is_nanos(spark: SparkSession, sf_dir: str) -> bool:
-    """Probe the events.parquet footer (one driver-side schema read, no
-    data scan) for the testdata generation: True = TIMESTAMP(NANOS)
-    (surfaces as bigint under the legacy flag), False = TIMESTAMP(MICROS)
-    (surfaces as timestamp_ntz)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return df.schema["ts"].dataType.simpleString() == "bigint"
-
-
 def read_events_stream(
     spark: SparkSession,
     sf_dir: str,

@@ -55,11 +55,14 @@ from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.store import (
     begin,
     commit,
+    drop_tombstoned,
     fold_delta,
     pending,
     read_with_delta,
     recover,
     stream_to_delta,
+    tombstoned,
+    tombstones,
     write_delta_batch,
 )
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
@@ -172,18 +175,17 @@ def fold_chunk_store_delta(spark: SparkSession, store_dir: str) -> bool:
 def delete_docs_from_chunk_store(
     spark: SparkSession, store_dir: str, doc_ids: DataFrame
 ) -> None:
-    """Right-to-be-forgotten at chunk grain: land the doc ids in a
-    tombstone table (O(batch) — no store rewrite on the delete path).
-    Serving reads go through :func:`read_chunk_store_served`, whose
-    anti-join is a plan no-op while no delete has ever landed (the
-    `apply_tombstones` discipline); the physical purge is
+    """Right-to-be-forgotten at chunk grain: add the doc ids to the
+    tombstone table in one staged store commit (O(batch) — no store
+    rewrite on the delete path; a crash leaves the delete absent or
+    whole). Serving reads go through :func:`read_chunk_store_served`,
+    whose anti-join is a plan no-op while no delete has ever landed
+    (the `apply_tombstones` discipline); the physical purge is
     :func:`fold_chunk_store_tombstones`, run at maintenance cadence."""
-    recover(store_dir)
-    write_table(
-        doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id")),
-        f"{store_dir}/deleted_docs",
-        mode="append",
-    )
+    dead = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
+    stage = begin(store_dir)
+    write_table(dead, f"{stage}/deleted_docs")
+    commit(store_dir, stage, add=["deleted_docs"])
 
 
 def read_chunk_store_served(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -192,10 +194,7 @@ def read_chunk_store_served(spark: SparkSession, store_dir: str) -> DataFrame:
     store scan — pinned serving plans stay unchanged until a delete
     actually lands."""
     ch = read_chunk_store(spark, store_dir)
-    if not os.path.isdir(f"{store_dir}/deleted_docs"):
-        return ch
-    dead = read_parquet_memo(spark, f"{store_dir}/deleted_docs").select("doc_id")
-    return ch.join(dead, "doc_id", "left_anti")
+    return drop_tombstoned(spark, ch, store_dir, "deleted_docs", "doc_id")
 
 
 def fold_chunk_store_tombstones(spark: SparkSession, store_dir: str) -> None:
@@ -209,13 +208,14 @@ def fold_chunk_store_tombstones(spark: SparkSession, store_dir: str) -> None:
     drops every partition the purge EMPTIED (dynamic partition
     overwrite only replaces partitions PRESENT in the written data, so
     an emptied one would resurrect) and drops the tombstones."""
-    if not os.path.isdir(f"{store_dir}/deleted_docs"):
+    recover(store_dir)
+    if not tombstoned(store_dir, "deleted_docs"):
         return
     # pending streamed delta first (its own commit): the purge rewrites
     # MAIN partitions only, and a dead doc still sitting in an unfolded
     # delta would resurrect once the tombstones are dropped
     fold_chunk_store_delta(spark, store_dir)
-    dead = read_parquet_memo(spark, f"{store_dir}/deleted_docs").select("doc_id").distinct()
+    dead = tombstones(spark, store_dir, "deleted_docs", "doc_id").distinct()
     ch = read_parquet_memo(spark, f"{store_dir}/chunks")
     affected = sorted(
         r["h_pt"]
@@ -406,7 +406,7 @@ def documents_stream_chunk_append(spark, sf_dir):
 def chunk_maintenance_due(store_dir: str, min_delta_batches: int = 4) -> dict:
     recover(store_dir)
     n = pending(store_dir, ["chunks"]).get("chunks", 0)
-    tomb = os.path.isdir(f"{store_dir}/deleted_docs")
+    tomb = tombstoned(store_dir, "deleted_docs")
     return {
         "due": n >= min_delta_batches or tomb,
         "pending_batches": n,

@@ -78,11 +78,13 @@ from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.store import (
     begin,
     commit,
+    drop_tombstoned,
     pending,
-    pending_batches,
     read_with_delta,
     recover,
     stream_to_delta,
+    tombstoned,
+    tombstones,
     write_delta_batch,
 )
 from udacity_dend_capstone_immigration_spark.sources.writers import write_table
@@ -266,14 +268,14 @@ def delete_from_dedup_index(
     spark: SparkSession, deleted_docs: DataFrame, index_dir: str
 ) -> int:
     """Right-to-be-forgotten: remove documents from the index in
-    O(deleted batch) — the text twin of `delete_from_ivf_index`.
+    O(deleted batch) — the text twin of `vectors.delete_from_index`.
 
     ``deleted_docs`` must be the (doc_id, text) rows of currently-LIVE
     indexed docs (the text is required to retract the docs' shingle
     contributions from the UNcapped df statistics — deleting a doc the
     store never indexed would corrupt them).
 
-    Writes, in crash-ordered sequence:
+    Stages, and lands in one store commit:
 
     1. NEGATIVE (g, -df) rows into ``shingle_df`` for the deleted
        docs' shingles — the stats stay sum-exact, so later appends'
@@ -284,10 +286,7 @@ def delete_from_dedup_index(
        a corpus pass can restore them (:func:`revive_shingles`, at
        maintenance cadence — the same "deletes don't retrain" scope
        the ANN store draws);
-    3. ``deleted_docs/`` cid tombstones LAST — serve reads flip to the
-       post-delete view atomically with this write; a crash before it
-       leaves stats conservative (df overcounted → a shingle might cap
-       earlier than a rebuild would) but never serves deleted docs.
+    3. ``deleted_docs/`` cid tombstones.
 
     Returns the number of revival-due shingles recorded."""
     k, cap, n_buckets = _read_meta(spark, index_dir)
@@ -313,19 +312,21 @@ def delete_from_dedup_index(
         (F.coalesce("df_m", F.lit(0)) > cap) & (after > 0) & (after <= cap)
     ).select("g")
     n_due = due.count()
+    stage = begin(index_dir)
     write_table(
         gd.select("g", (-F.col("df_d")).alias("df"), "g_pt"),
-        f"{index_dir}/shingle_df",
+        f"{stage}/shingle_df",
         partition_by=["g_pt"],
-        mode="append",
     )
+    rels = ["shingle_df", "deleted_docs"]
     if n_due:
-        write_table(due, f"{index_dir}/revival_due", mode="append")
+        write_table(due, f"{stage}/revival_due")
+        rels.append("revival_due")
     write_table(
         deleted_docs.select(F.col("doc_id").alias("cid")),
-        f"{index_dir}/deleted_docs",
-        mode="append",
+        f"{stage}/deleted_docs",
     )
+    commit(index_dir, stage, add=rels)
     return int(n_due)
 
 
@@ -343,19 +344,14 @@ def revive_shingles(
     tombstones lifted, plus ``revival_due`` dropped. Returns the number
     of postings re-indexed."""
     recover(index_dir)
-    due_dir = f"{index_dir}/revival_due"
-    if not os.path.isdir(due_dir):
+    if not tombstoned(index_dir, "revival_due"):
         return 0
     k, _, n_buckets = _read_meta(spark, index_dir)
-    due = read_parquet_memo(spark, due_dir).select("g").distinct().localCheckpoint()
+    due = tombstones(spark, index_dir, "revival_due", "g").distinct().localCheckpoint()
     e = shingle_rows(corpus_docs, "doc_id", "text", k).withColumnRenamed(
         "shingle", "g"
     )
-    gone = _dead_docs(spark, index_dir)
-    if gone is not None:
-        e = e.join(
-            gone.select(F.col("cid").alias("doc_id")), "doc_id", "left_anti"
-        )
+    e = drop_tombstoned(spark, e, index_dir, "deleted_docs", "cid", on="doc_id")
     revived = (
         e.join(due, "g")
         .select("g", F.col("doc_id").alias("cid"))
@@ -417,36 +413,6 @@ def stream_append_to_dedup_index(
     )
 
 
-def _dead_shingles(spark: SparkSession, index_dir: str):
-    """Union of folded and streamed tombstones; None when neither
-    exists (the serve-plan no-op contract)."""
-    parts = []
-    if os.path.isdir(f"{index_dir}/dropped_shingles"):
-        parts.append(
-            read_parquet_memo(spark, f"{index_dir}/dropped_shingles").select("g")
-        )
-    if pending_batches(f"{index_dir}/dropped_shingles_delta"):
-        parts.append(
-            read_parquet_memo(spark, f"{index_dir}/dropped_shingles_delta").select("g")
-        )
-    if not parts:
-        return None
-    dead = parts[0]
-    for p in parts[1:]:
-        dead = dead.unionByName(p)
-    return dead
-
-
-def _dead_docs(spark: SparkSession, index_dir: str):
-    """Document tombstones (right-to-be-forgotten deletes); None when
-    no delete has landed — the same serve-plan no-op contract as
-    `_dead_shingles`."""
-    d = f"{index_dir}/deleted_docs"
-    if not os.path.isdir(d):
-        return None
-    return read_parquet_memo(spark, d).select("cid")
-
-
 def read_dedup_shingle_index(
     spark: SparkSession, index_dir: str, with_bucket: bool = False
 ) -> DataFrame:
@@ -459,13 +425,8 @@ def read_dedup_shingle_index(
     estimate-blind class)."""
     cols = ["g", "cid"] + (["g_pt"] if with_bucket else [])
     idx = read_with_delta(spark, index_dir, "shingle_index", cols)
-    dead = _dead_shingles(spark, index_dir)
-    if dead is not None:
-        idx = idx.join(dead, "g", "left_anti")
-    gone = _dead_docs(spark, index_dir)
-    if gone is not None:
-        idx = idx.join(gone, "cid", "left_anti")
-    return idx
+    idx = drop_tombstoned(spark, idx, index_dir, "dropped_shingles", "g")
+    return drop_tombstoned(spark, idx, index_dir, "deleted_docs", "cid")
 
 
 def read_dedup_fingerprints(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -476,9 +437,7 @@ def read_dedup_fingerprints(spark: SparkSession, index_dir: str) -> DataFrame:
     A fingerprint SHARED by a deleted and a live doc correctly
     survives: only the deleted doc's row dies."""
     fp = read_with_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
-    gone = _dead_docs(spark, index_dir)
-    if gone is not None:
-        fp = fp.join(gone, "cid", "left_anti")
+    fp = drop_tombstoned(spark, fp, index_dir, "deleted_docs", "cid")
     return fp.select("fp", "fp_pt")
 
 
@@ -486,12 +445,7 @@ def read_dedup_doc_sizes(spark: SparkSession, index_dir: str) -> DataFrame:
     """(doc_id, n) distinct-shingle counts for every LIVE indexed doc
     (main ∪ streamed delta, deleted docs anti-joined out)."""
     sz = read_with_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
-    gone = _dead_docs(spark, index_dir)
-    if gone is not None:
-        sz = sz.join(
-            gone.select(F.col("cid").alias("doc_id")), "doc_id", "left_anti"
-        )
-    return sz
+    return drop_tombstoned(spark, sz, index_dir, "deleted_docs", "cid", on="doc_id")
 
 
 def fold_dedup_index(spark: SparkSession, index_dir: str) -> None:
@@ -522,13 +476,8 @@ def _fold_commit(spark, index_dir: str, due=None, revived=None) -> None:
         .select("g", "df", "g_pt")
     )
     fp = read_with_delta(spark, index_dir, "fingerprints", ["fp", "cid", "fp_pt"])
-    sizes = read_with_delta(spark, index_dir, "doc_sizes", ["doc_id", "n"])
-    gone = _dead_docs(spark, index_dir)
-    if gone is not None:
-        fp = fp.join(gone, "cid", "left_anti")
-        sizes = sizes.join(
-            gone.select(F.col("cid").alias("doc_id")), "doc_id", "left_anti"
-        )
+    fp = drop_tombstoned(spark, fp, index_dir, "deleted_docs", "cid")
+    sizes = read_dedup_doc_sizes(spark, index_dir)
     stage = begin(index_dir)
     write_table(idx, f"{stage}/shingle_index", partition_by=["g_pt"])
     write_table(stats, f"{stage}/shingle_df", partition_by=["g_pt"])
@@ -896,7 +845,7 @@ def dedup_index_fold_roundtrip(spark, sf_dir):
     )
     append_to_dedup_index(spark, docs.where(_is_batch()), out)
     fold_dedup_index(spark, out)
-    pending = 1 if os.path.isdir(f"{out}/dropped_shingles") else 0
+    pending = int(tombstoned(out, "dropped_shingles"))
     return _index_aggregate(spark, out, distinct_fp=False).withColumn(
         "pending_tombstones", F.lit(pending).cast("int")
     )
@@ -932,7 +881,7 @@ def dedup_index_delete_roundtrip(spark, sf_dir):
     delete_from_dedup_index(
         spark, docs.where(F.col("doc_id") % 5 == 1).select("doc_id", "text"), out
     )
-    pending = 1 if os.path.isdir(f"{out}/revival_due") else 0
+    pending = int(tombstoned(out, "revival_due"))
     return _index_aggregate(spark, out).withColumn(
         "pending_revivals", F.lit(pending).cast("int")
     )
@@ -971,7 +920,7 @@ def dedup_index_revive_roundtrip(spark, sf_dir):
         spark, docs.where(F.col("doc_id") % 5 == 1).select("doc_id", "text"), out
     )
     revive_shingles(spark, out, live.select("doc_id", "text"))
-    pending = 1 if os.path.isdir(f"{out}/revival_due") else 0
+    pending = int(tombstoned(out, "revival_due"))
     return _index_aggregate(spark, out).withColumn(
         "pending_revivals", F.lit(pending).cast("int")
     )
@@ -996,17 +945,15 @@ def dedup_maintenance_due(index_dir: str, min_delta_batches: int = 4) -> dict:
     recover(index_dir)
     batches = pending(index_dir, DEDUP_DELTA_RELS)
     crossing = [rel for rel, n in batches.items() if n >= min_delta_batches]
-    tomb = os.path.isdir(f"{index_dir}/dropped_shingles") or bool(
-        pending_batches(f"{index_dir}/dropped_shingles_delta")
-    )
+    tomb = tombstoned(index_dir, "dropped_shingles")
     # doc tombstones (right-to-be-forgotten deletes): the fold applies
     # them physically, so they count toward due exactly like shingle
     # tombstones (r14 — the policy previously missed them)
-    doc_tomb = os.path.isdir(f"{index_dir}/deleted_docs")
+    doc_tomb = tombstoned(index_dir, "deleted_docs")
     # reverse cap-crossings awaiting re-index: REPORT-ONLY — clearing
     # them (`revive_shingles`) needs the live corpus, a job the poller
     # schedules explicitly, like ANN tombstone compaction
-    revival = os.path.isdir(f"{index_dir}/revival_due")
+    revival = tombstoned(index_dir, "revival_due")
     return {
         "due": bool(crossing) or tomb or doc_tomb,
         "crossing": crossing,

@@ -301,14 +301,15 @@ def _vocab_partitions(docs) -> int:
     training round re-scans the checkpoint through a Python kernel, so
     empty partitions cost a worker round-trip each, per round."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
+        PARTITION_BYTES,
         estimated_bytes,
     )
 
     par = docs.sparkSession.sparkContext.defaultParallelism
     est = estimated_bytes(docs)
-    if est is None or est >= (32 << 20) * par:
+    if est is None or est >= PARTITION_BYTES * par:
         return par
-    return max(1, est // (32 << 20) + 1)
+    return max(1, est // PARTITION_BYTES + 1)
 
 
 def _bpe_vocab(docs):

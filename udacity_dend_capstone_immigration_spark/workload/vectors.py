@@ -21,12 +21,14 @@ from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.sources.store import (
     begin,
     commit,
+    drop_tombstoned,
     fold_delta,
     pending,
     pending_batches,
     read_with_delta,
     recover,
     stream_to_delta,
+    tombstoned,
     write_delta_batch,
 )
 from udacity_dend_capstone_immigration_spark.workload.base import (
@@ -1485,15 +1487,6 @@ def fold_store_delta(spark, index_dir: str, store: str) -> bool:
     return fold_delta(spark, index_dir, store, _STORE_COLS[store], "cell_pt")
 
 
-def _parquet_file_count(d: str) -> int:
-    import os
-
-    n = 0
-    for root, _dirs, files in os.walk(d):
-        n += sum(1 for f in files if f.endswith(".parquet") and not f.startswith((".", "_")))
-    return n
-
-
 #: the benchmark harness imports the pending-batch count under this name
 _pending_batches = pending_batches
 
@@ -1541,7 +1534,7 @@ def maintenance_due(
     recover(index_dir)
     batches = pending(index_dir, _INDEX_STORES)
     fold = [store for store, n in batches.items() if n >= min_delta_batches]
-    tomb = os.path.isdir(f"{index_dir}/deleted_ids")
+    tomb = tombstoned(index_dir, "deleted_ids")
     report = {
         "due": bool(fold) or tomb,
         "fold": fold,
@@ -1675,9 +1668,10 @@ _INDEX_STORES = tuple(_STORE_COLS)
 
 
 def delete_from_index(spark, index_dir: str, ids) -> None:
-    """faiss ``remove_ids`` as a TOMBSTONE table: append the ids to
+    """faiss ``remove_ids`` as a TOMBSTONE table: add the ids to
     ``deleted_ids`` (one column, bounded by the delete batch — never a
-    corpus rewrite on the delete path). Serving applies tombstones
+    corpus rewrite on the delete path) in one staged store commit, so a
+    crash leaves the delete absent or whole. Serving applies tombstones
     logically via :func:`apply_tombstones`; the next
     :func:`compact_index_cells` applies them physically (rows dropped
     from the rewritten cells) and clears the table. This is the
@@ -1686,26 +1680,20 @@ def delete_from_index(spark, index_dir: str, ids) -> None:
     or a one-column DataFrame (written through, never collected)."""
     from udacity_dend_capstone_immigration_spark.sources.writers import write_table
 
-    recover(index_dir)
     if isinstance(ids, list):
         df = local_frame(spark, [(int(i),) for i in ids], "vec_id long")
     else:
         df = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id"))
-    write_table(df, f"{index_dir}/deleted_ids", mode="append")
+    stage = begin(index_dir)
+    write_table(df, f"{stage}/deleted_ids")
+    commit(index_dir, stage, add=["deleted_ids"])
 
 
-def apply_tombstones(spark, index_dir: str, df, id_col: str = "vec_id"):
+def apply_tombstones(spark, index_dir: str, df):
     """Anti-join pending tombstones into a store scan — a no-op (and a
     plan no-op: zero extra nodes) when the index has none, so the
     pinned serving plans are unchanged until a delete actually lands."""
-    import os
-
-    if not os.path.isdir(f"{index_dir}/deleted_ids"):
-        return df
-    dead = read_parquet_memo(spark, f"{index_dir}/deleted_ids").select(
-        F.col("vec_id").alias(id_col)
-    )
-    return df.join(dead, id_col, "left_anti")
+    return drop_tombstoned(spark, df, index_dir, "deleted_ids", "vec_id")
 
 
 def compact_index_cells(spark, index_dir: str, cells=None) -> dict:
@@ -2320,7 +2308,7 @@ def ann_retrain_roundtrip(spark, sf_dir):
     import os
 
     assert not os.path.isdir(f"{idx}/ivf_vectors_delta")  # retired
-    assert not os.path.isdir(f"{idx}/deleted_ids")  # retired
+    assert not tombstoned(idx, "deleted_ids")  # retired
     back = read_parquet_memo(spark, f"{idx}/ivf_vectors")
     em = F.aggregate(
         F.col("embedding").cast("array<double>"),
